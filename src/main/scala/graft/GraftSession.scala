@@ -45,11 +45,10 @@ object GraftSession {
       // optimization here — nothing else emits foldable partitions)
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      // name-based addressing through Spark's public catalog machinery:
-      // CREATE/SELECT/INSERT/MERGE/SHOW TABLES resolve `graft.<name>`
-      // via GraftCatalog (the graft.`/abs/path` spelling keeps working
-      // through the same catalog); graft_dv = the merge-on-read DML
-      // strategy by name
+      // the one SQL front end for graft tables: every statement on
+      // `graft.<name>` and the graft.`/abs/path` spelling resolves
+      // through GraftCatalog and Spark's own v2 analysis; graft_dv = the
+      // merge-on-read DML strategy by name
       .config("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
       .config("spark.sql.catalog.graft.warehouse",
         s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_tables")

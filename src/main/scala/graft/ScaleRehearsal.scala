@@ -552,10 +552,11 @@ object ScaleRehearsal {
     spark.stop()
   }
 
-  /** Face-generic catalog-only DML tier (r19 ask #7): the r18 interop
-    * surfaces get the same measured receipt the engine paths carry. A
-    * hive-partitioned PARQUET-face table (~8M rows, 8 leaves, several
-    * parts per leaf) is driven BY NAME from an extension-free session:
+  /** Face-generic catalog DML tier (r19 ask #7): the catalog's
+    * row-level surfaces get the same measured receipt the engine paths
+    * carry. A hive-partitioned PARQUET-face table (~8M rows, 8 leaves,
+    * several parts per leaf) is driven BY NAME from an extension-free
+    * session:
     *
     *  - a partition-pruned COW DELETE must rewrite ONLY the named
     *    leaf's files (every other leaf carried through the manifest

@@ -51,40 +51,21 @@ import graft.sources.{FeatherPartitions, FeatherSnapshots}
   * the merge-on-read DML strategy by name (the catalog's initialized
   * NAME picks the face, exactly like the path spellings).
   *
-  * Reads, inserts, and DML over catalog-resolved relations are lowered
-  * by the session extension rules ([[graft.extensions]]) onto the same
-  * face-dispatched engine paths the path spellings use — the catalog
-  * resolves NAMES and serves metadata (schema, partitioning,
-  * DESCRIBE/SHOW surfaces, CREATE/ALTER/DROP/RENAME); it does not
-  * duplicate the execution tier.
+  * This catalog is the ONE SQL front end for graft tables: every
+  * statement on `graft.`/`graft_dv.` — names and the path spelling
+  * alike — runs through Spark's own v2 analysis. Reads and inserts use
+  * the handle's scan/write builders, DELETE/UPDATE/MERGE the row-level
+  * rewrite ([[GraftTable.newRowLevelOperationBuilder]]), CREATE/REPLACE
+  * [AS SELECT] the staged commit ([[graft.sources.FeatherStagedTable]]);
+  * the few v2 commands Spark plans no exec for (MSCK REPAIR, ANALYZE,
+  * the DESCRIBE EXTENDED detail block) are planned by
+  * [[graft.extensions.DeferredActionStrategy]].
   *
   * (Reference anchor: the reference's frames are named PYTHON objects —
   * python/cudf/cudf/core/dataframe.py instances live in the
   * interpreter's namespace — so "address a table by name" needs no
   * machinery there; a persistent distributed engine expresses the same
   * ergonomics through Spark's TableCatalog.) */
-private[graft] object GraftCatalog {
-  /** Whether the ACTIVE session carries the graft extension rules —
-    * decides which table handle [[GraftCatalog.loadTable]] returns (see
-    * the note in resolve()). Primary signal: the EXPLICIT marker conf
-    * the extension's rule builders stamp on their session
-    * ([[graft.extensions.GraftExtensions.ActiveMarker]]); touching the
-    * analyzer first forces the builders to have run. Fallback for
-    * exotically-built sessions: a compile-time instance check against
-    * the rule class itself (never a class-NAME sniff — a package rename
-    * must fail to compile here, not silently flip every catalog-only
-    * session onto the wrong handle). Conservative on any failure:
-    * assume graft, whose handle has the smaller surface. */
-  def isGraftSession: Boolean =
-    try {
-      val s = SparkSession.active
-      val rules = s.sessionState.analyzer.extendedResolutionRules
-      s.conf.get(graft.extensions.GraftExtensions.ActiveMarker,
-        "false") == "true" ||
-        rules.exists(_.isInstanceOf[graft.extensions.GraftMergeIntoRule])
-    } catch { case _: Exception => true }
-}
-
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with StagingTableCatalog with ProcedureCatalog {
 
@@ -193,12 +174,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     resolve(ident, None, Some(Math.floorDiv(timestampMicros, 1000L)))
 
   private def resolve(ident: Identifier, versionAsOf: Option[Long],
-                      tsMillis: Option[Long]): GraftTable = {
+                      tsMillis: Option[Long]): Table = {
     val path = pathOf(ident)
     val root = new Path(path)
     val fs = fsOf(root)
-    if (!fs.exists(root) || !FeatherSnapshots.enabled(fs, root))
+    if (!fs.exists(root)) throw new NoSuchTableException(ident)
+    if (!FeatherSnapshots.enabled(fs, root)) {
+      // a PLAIN directory addressed by path resolves to a handle that
+      // only MSCK REPAIR TABLE can use (it adopts the directory); named
+      // identifiers and the other statements see no table
+      if (isPathIdent(ident) && versionAsOf.isEmpty && tsMillis.isEmpty)
+        return new PlainDirectory(path, s"$catalogName.$ident")
       throw new NoSuchTableException(ident)
+    }
     val snap = tsMillis match {
       case Some(ms) => FeatherSnapshots.resolveAt(fs, root, ms)
       case None => FeatherSnapshots.resolve(fs, root, versionAsOf)
@@ -209,26 +197,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       (new Path(root, rel).toString, len) }
     val dataSchema = face.mergedSchema(spark, absFiles)
     val discovered = FeatherSnapshots.toDiscovered(root, snap)
-    val partSchema = discovered.partSchema
     val pinned = if (versionAsOf.isDefined || tsMillis.isDefined)
       Some(snap.version) else None
-    // A graft session gets the base handle: its extension rules claim
-    // every DML statement and own insert alignment (ACCEPT_ANY_SCHEMA),
-    // and the handle must NOT implement SupportsRowLevelOperations —
-    // Spark's analyzer-batch DML rewrites would otherwise claim a
-    // by-name DELETE/UPDATE/MERGE before the extension rules run,
-    // silently rerouting graft_dv merge-on-read deletes into COW
-    // rewrites and refusing partitioned targets the engine serves. A
-    // catalog-only session gets the row-level handle instead: Spark's
-    // own rewrite machinery is its ONLY DML path.
-    if (GraftCatalog.isGraftSession)
-      new GraftTable(path, s"$catalogName.$ident", dataSchema,
-        discovered.partCols, partSchema,
-        face.suffix.stripPrefix("."), snap.version, pinned, dvFace)
-    else
-      new GraftRowLevelTable(path, s"$catalogName.$ident", dataSchema,
-        discovered.partCols, partSchema,
-        face.suffix.stripPrefix("."), snap.version, pinned, dvFace)
+    new GraftTable(path, s"$catalogName.$ident", dataSchema,
+      discovered.partCols, discovered.partSchema,
+      face.suffix.stripPrefix("."), snap.version, pinned, dvFace)
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -259,8 +232,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // commitStagedChanges makes everything visible — replace keeps prior
   // versions time-travelable, and the strictest conflict contract in
   // the tier aborts on ANY concurrent commit (see FeatherStagedTable).
-  // Graft sessions reach the identical TableDdl.replaceTable commit
-  // through the extension rules instead; this is the catalog surface.
 
   override def stageCreate(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
@@ -291,9 +262,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"$op $catalogName.$ident: $msg")
     validateTableClauses(op, ident, properties.asScala.toMap, bad)
     // identity transforms only — same rule as the non-staged CREATE;
-    // the staged publish routes rows into key=value leaves through the
-    // engine's own CTAS/REPLACE lowering (every face), so PARTITIONED
-    // BY carries straight through
+    // the staged write routes rows into key=value leaves (every face),
+    // so PARTITIONED BY carries straight through
     val partCols = partitions.map {
       case t if t.name == "identity" && t.references.length == 1 &&
           t.references.head.fieldNames.length == 1 =>
@@ -322,8 +292,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** The clause refusals shared by CREATE and the staged CREATE/REPLACE
-    * surfaces — silently DROPPING a clause is worse than refusing it
-    * (the GraftCreateTableRule contract, applied to the catalog). */
+    * surfaces — silently DROPPING a clause is worse than refusing it. */
   private def validateTableClauses(op: String, ident: Identifier,
                                    props: Map[String, String],
                                    bad: String => Nothing): Unit = {
@@ -443,10 +412,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def invalidateTable(ident: Identifier): Unit = ()
 
   // ---- ProcedureCatalog ----------------------------------------------------
-  // `CALL <catalog>.system.<proc>(...)` — maintenance for catalog-only
-  // sessions (compact / expire / vacuum / analyze / restore), each
-  // delegating to the same engine implementation its graft-session TVF
-  // twin calls. See [[GraftProcedures]].
+  // `CALL <catalog>.system.<proc>(...)` — maintenance (compact /
+  // expire / vacuum / analyze / restore), each delegating to the same
+  // engine implementation its graft_* TVF twin calls. See
+  // [[GraftProcedures]].
 
   /** Table-address resolution for procedure arguments: the catalog's
     * two spellings (`ns.t` against THIS warehouse, or an absolute
@@ -572,17 +541,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
-/** The catalog's Table handle: metadata (schema, partitioning,
-  * DESCRIBE/SHOW surfaces) plus TRUNCATE. Reads and writes over it are
-  * claimed by the extension rules and lowered onto the engine's own
-  * scan/commit paths — the capabilities below exist so Spark's
-  * analyzer builds the standard logical plans (AppendData,
-  * OverwriteByExpression, OverwritePartitionsDynamic) for the rules to
-  * claim; no physical ScanBuilder/WriteBuilder ever runs.
-  * `ACCEPT_ANY_SCHEMA` keeps Spark's output resolver from re-aligning
-  * the insert query — TableInserts owns alignment (positional/BY
-  * NAME/column list under the lossless-or-exact cast rule), identical
-  * to the path spelling. */
+/** The catalog's ONE table handle, for names and the path spelling
+  * alike. Reads go through the face connectors (feather/avro) or the
+  * generic ConnectorFace scan (parquet); inserts through the connector
+  * sinks or [[graft.sources.FaceBatchWrite]]; DELETE/UPDATE/MERGE
+  * through [[newRowLevelOperationBuilder]]. Spark's own analyzer aligns
+  * every write (TableOutputResolver for inserts, the row-level
+  * assignment alignment for UPDATE/MERGE) against [[schema]], whose
+  * data columns are all nullable — the file-source convention: a
+  * column a MERGE INSERT or a column-list INSERT leaves out fills NULL,
+  * and every writer lands the same (nullable) footer schema. */
 private[graft] class GraftTable(
     val path: String, ident: String,
     val dataSchema: StructType, val partCols: Seq[String],
@@ -593,7 +561,8 @@ private[graft] class GraftTable(
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
-    with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
+    with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement
+    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
   /** `_file` (per-split constant) and `_pos` (per-row format-local
     * position) — the engine's stable row id, served by EVERY face's
@@ -607,7 +576,8 @@ private[graft] class GraftTable(
   override def name(): String = ident
 
   override def schema(): StructType =
-    StructType(dataSchema.fields ++ partSchema.fields)
+    StructType(org.apache.spark.sql.graft.Bridge.asNullable(dataSchema).fields ++
+      partSchema.fields)
 
   override def partitioning(): Array[Transform] =
     partCols.map(Expressions.identity).toArray
@@ -620,40 +590,41 @@ private[graft] class GraftTable(
       "format" -> s"graft/$face",
       "current-version" -> headVersion.toString).asJava
 
-  /** The feather/avro faces are full DSv2 connectors — STREAMING reads
-    * (`spark.readStream.table("graft.events")`) delegate to them, so a
-    * named table streams exactly like its `format("feather")` spelling
-    * (version-based snapshot offsets, exactly-once restarts). Batch
-    * scans never reach here in a graft session (the extension rules
-    * swap the relation for the face-dispatched snapshot read at
-    * analysis), but the delegation serves them too when only the
-    * catalog conf is set. */
+  /** The feather/avro faces are full DSv2 connectors — batch AND
+    * streaming reads (`spark.readStream.table("graft.events")`) delegate
+    * to them, so a named table reads and streams exactly like its
+    * `format("feather")` spelling (version-based snapshot offsets,
+    * exactly-once restarts). */
   private lazy val delegate: Option[Table] = (face match {
     case "feather" => Some(new graft.sources.FeatherDataSource())
     case "avro" => Some(new graft.sources.AvroDataSource())
     case _ => None
   }).map { src =>
-    // the pin travels with the delegate: in a catalog-only session
-    // (no graft extensions) BATCH scans run through this builder, and
-    // a VERSION AS OF read must not silently serve the head
+    // the pin travels with the delegate: a VERSION AS OF read must not
+    // silently serve the head
     val opts = new java.util.HashMap[String, String]()
     opts.put("path", path)
     // the catalog serves the merged UNION schema — the delegate must
     // decode leniently (older files null-fill evolved columns), exactly
-    // like the engine's own table-read spelling (TableReads)
+    // like the engine's own table reads
     opts.put("mergeSchema", "true")
     pinnedVersion.foreach(v => opts.put("versionasof", v.toString): Unit)
     src.getTable(schema(), partitioning(), opts)
   }
 
   override def capabilities(): java.util.Set[TableCapability] = {
+    // AUTOMATIC_SCHEMA_EVOLUTION: MERGE WITH SCHEMA EVOLUTION — Spark's
+    // ResolveMergeIntoSchemaEvolution computes the source-minus-target
+    // additions, applies them through the catalog's alterTable
+    // (top-level nullable ADD COLUMNS, the engine's evolution contract)
+    // and reloads the relation before the row-level rewrite plans
     val caps = java.util.EnumSet.of(
       TableCapability.BATCH_READ,
       TableCapability.BATCH_WRITE,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.TRUNCATE,
-      TableCapability.ACCEPT_ANY_SCHEMA)
+      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
     // a time-travel pin has no streaming meaning, and the parquet face
     // streams through the face-agnostic `feather-cdf` format instead
     if (delegate.isDefined && pinnedVersion.isEmpty) {
@@ -676,11 +647,8 @@ private[graft] class GraftTable(
         t.newScanBuilder(options)
       case _ =>
         // faces without a DSv2 connector (parquet) read through the
-        // generic ConnectorFace scan: whole-file partitions, partition/
-        // stats/bloom file skipping, DV-aware, `_file`/`_pos` served. A
-        // graft session never reaches here for batch reads (the
-        // extension rules lower them onto the vectorized engine scan);
-        // this is the catalog-only interop path.
+        // generic ConnectorFace scan: vectorized splits, partition/
+        // stats/bloom file skipping, DV-aware, `_file`/`_pos` served.
         // pinnedVersion only: an unpinned handle resolves the HEAD at
         // scan time, exactly like the connector delegates
         new graft.sources.FaceScanBuilder(None,
@@ -688,12 +656,10 @@ private[graft] class GraftTable(
           pinnedVersion)
     }
 
-  /** Streaming sinks (and catalog-only batch writes) delegate like the
-    * read path — the connectors' write builders detect the manifest and
-    * commit through the snapshot protocol regardless of options, so a
-    * delegated write IS a proper table commit. In a graft session,
-    * batch INSERTs never reach here (the extension rules claim the V2
-    * write plans at analysis). */
+  /** Batch and streaming writes delegate like the read path — the
+    * connectors' write builders detect the manifest and commit through
+    * the snapshot protocol regardless of options, so a delegated write
+    * IS a proper table commit. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -705,7 +671,15 @@ private[graft] class GraftTable(
       // native part writers, streaming sinks included)
       case Some(t: org.apache.spark.sql.connector.catalog.SupportsWrite)
           if partCols.isEmpty =>
-        t.newWriteBuilder(info)
+        // parts carry nullable columns like every other writer of the
+        // table (a literal's non-null footer must not narrow the table)
+        t.newWriteBuilder(new org.apache.spark.sql.connector.write
+            .LogicalWriteInfo {
+          override def options() = info.options()
+          override def queryId() = info.queryId()
+          override def schema() =
+            org.apache.spark.sql.graft.Bridge.asNullable(info.schema())
+        })
       // everything else — the parquet face (no connector) and HIVE-
       // PARTITIONED tables on any face (the flat sinks refuse root
       // appends into key=value layouts) — writes through the generic
@@ -726,8 +700,7 @@ private[graft] class GraftTable(
 
   // ---- SupportsPartitionManagement ----------------------------------------
   // SHOW PARTITIONS (incl. the filtered PARTITION (k=v) form) runs
-  // through Spark's OWN ShowPartitionsExec — in graft and catalog-only
-  // sessions alike. Partitions DERIVE from the hive key=value layout
+  // through Spark's OWN ShowPartitionsExec. Partitions DERIVE from the hive key=value layout
   // the manifest records, so the management verbs refuse with the
   // statement that actually does the job.
 
@@ -755,6 +728,12 @@ private[graft] class GraftTable(
       : Unit =
     partitionRefusal("ALTER TABLE ... SET partition metadata",
       "there is no metastore to hold per-partition properties")
+
+  override def truncatePartition(ident0: InternalRow): Boolean =
+    partitionRefusal("TRUNCATE TABLE ... PARTITION (...): partition-scoped " +
+      "truncate is not supported",
+      "use DELETE FROM ... WHERE on the partition column, or INSERT " +
+        "OVERWRITE ... PARTITION (k=v) with an empty query")
 
   override def loadPartitionMetadata(ident0: InternalRow)
       : JMap[String, String] = java.util.Collections.emptyMap()
@@ -795,43 +774,7 @@ private[graft] class GraftTable(
     }).toArray
   }
 
-}
-
-/** The catalog-only session's table handle: the base surface plus
-  * `SupportsRowLevelOperations`, so DELETE / UPDATE / MERGE run through
-  * Spark's own rewrite machinery ([[graft.sources.FeatherRowLevelOperation]]
-  * — group-based copy-on-write). Never handed to a graft session: there
-  * the extension rules own DML (pruned COW / merge-on-read, every face,
-  * partitioned layouts), and the analyzer's DML-rewrite batch would
-  * claim a row-level-capable table first. ACCEPT_ANY_SCHEMA is withheld
-  * too — nothing in a plain session re-aligns inserts (Spark's
-  * TableOutputResolver must), and the capability sets
-  * `skipSchemaResolution` on UPDATE/MERGE, which disables Spark's
-  * assignment alignment and strands the statement at physical
-  * planning. */
-private[graft] class GraftRowLevelTable(
-    path: String, ident: String, dataSchema: StructType,
-    partCols: Seq[String], partSchema: StructType, face: String,
-    headVersion: Long, pinnedVersion: Option[Long], dvFace: Boolean)
-    extends GraftTable(path, ident, dataSchema, partCols, partSchema,
-      face, headVersion, pinnedVersion, dvFace)
-    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
-
-  override def capabilities(): java.util.Set[TableCapability] = {
-    val caps = java.util.EnumSet.copyOf(super.capabilities())
-    caps.remove(TableCapability.ACCEPT_ANY_SCHEMA): Unit
-    // MERGE WITH SCHEMA EVOLUTION parity with graft sessions: Spark's
-    // ResolveMergeIntoSchemaEvolution keys on this capability, computes
-    // the source-minus-target additions, applies them through THIS
-    // catalog's alterTable (top-level nullable ADD COLUMNS — exactly
-    // the engine's evolution contract; retypes refuse there loudly),
-    // and reloads the relation before the row-level rewrite plans.
-    // Never on the graft-session handle: the extension rules own merge
-    // evolution there (ConditionalMerge.withSchemaEvolution), and an
-    // eager analyzer-side ALTER would race their one-commit semantics.
-    caps.add(TableCapability.AUTOMATIC_SCHEMA_EVOLUTION): Unit
-    caps
-  }
+  // ---- SupportsRowLevelOperations -----------------------------------------
 
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
@@ -880,4 +823,24 @@ private[graft] class GraftRowLevelTable(
             partSchema, delta = dvFace && !ownsRowId)
     }
   }
+}
+
+/** A PLAIN directory (data files, no snapshot manifest) addressed by
+  * the path spelling: the handle `MSCK REPAIR TABLE graft.`/dir`` needs
+  * to resolve — the statement ADOPTS the directory into a snapshot
+  * table (planned by [[graft.extensions.DeferredActionStrategy]]).
+  * Every other statement refuses: a read names the adoption, and there
+  * is no write or row-level capability. */
+private[graft] class PlainDirectory(val path: String, ident: String)
+    extends Table with org.apache.spark.sql.connector.catalog.SupportsRead {
+  override def name(): String = ident
+  override def schema(): StructType = new StructType()
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap)
+      : org.apache.spark.sql.connector.read.ScanBuilder =
+    throw new IllegalArgumentException(
+      s"$ident: the directory carries no ${FeatherSnapshots.Dir} " +
+        "manifest, so it is not a graft table — MSCK REPAIR TABLE " +
+        "adopts it (or read it with spark.read)")
 }

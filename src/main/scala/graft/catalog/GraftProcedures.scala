@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 import graft.sources.FeatherSnapshots
 
-/** `CALL <catalog>.system.<procedure>(...)` — the MAINTENANCE tier for
-  * catalog-only sessions, through Spark's own DSv2 procedure machinery:
+/** `CALL <catalog>.system.<procedure>(...)` — the MAINTENANCE tier
+  * through Spark's own DSv2 procedure machinery:
   *
   * {{{
   *   CALL graft.system.compact('ns.events')

@@ -47,54 +47,6 @@ private[extensions] case class DeferredMaintenanceAction(
     s"DeferredMaintenanceAction $name"
 }
 
-/** The COMMAND twin of [[DeferredMaintenanceAction]], for the SQL DML
-  * statements (MERGE INTO / UPDATE / DELETE FROM): Spark's own
-  * MergeIntoTable/UpdateTable/DeleteFromTable are Commands, so the
-  * graft lowering must keep the Command contract — `spark.sql("DELETE
-  * FROM graft.\`/t\` ...")` executes EAGERLY, exactly ONCE, at
-  * statement issue (Delta parity; a ported ETL job that discards the
-  * returned frame must still mutate), and re-collecting the returned
-  * frame replays the CACHED one-row report, never the mutation.
-  * `EXPLAIN <statement>` still never mutates — Spark analyzes explained
-  * commands with CommandExecutionMode.SKIP. The TVF tier keeps the
-  * DEFERRED leaf above: a table function lives inside a SELECT, where
-  * eager execution at analysis would be the bug. */
-private[extensions] case class GraftDmlCommand(
-    name: String,
-    override val output: Seq[Attribute],
-    action: () => Seq[Row]) extends LeafNode
-    with org.apache.spark.sql.catalyst.plans.logical.Command {
-  override def simpleString(maxFields: Int): String =
-    s"GraftDmlCommand $name"
-}
-
-/** The one-row DML report every SQL mutation statement returns
-  * (version, files_touched, files_kept, parts_written), lowered as a
-  * [[GraftDmlCommand]] — shared by the MERGE/UPDATE/DELETE rule and the
-  * INSERT rule so the two spellings of one mutation tier report
-  * identically. */
-private[extensions] object GraftDml {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types._
-
-  def report(name: String)
-            (action: () => graft.io.FeatherMutations.Result): LogicalPlan = {
-    val schema = StructType(Seq(
-      StructField("version", LongType, nullable = false),
-      StructField("files_touched", IntegerType, nullable = false),
-      StructField("files_kept", IntegerType, nullable = false),
-      StructField("parts_written", IntegerType, nullable = false)))
-    GraftDmlCommand(name,
-      schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-        .toSeq,
-      () => {
-        val r = action()
-        Seq(Row(r.version, r.filesTouched, r.filesKept, r.partsWritten))
-      })
-  }
-}
-
 private[extensions] case class DeferredMaintenanceActionExec(
     name: String,
     output: Seq[Attribute],
@@ -116,16 +68,60 @@ private[extensions] case class DeferredMaintenanceActionExec(
     s"DeferredMaintenanceActionExec $name"
 }
 
+/** Plans the deferred maintenance leaf, plus the v2 commands Spark's own
+  * planner leaves without an exec for a graft table: `MSCK REPAIR
+  * TABLE` adopts a plain directory ([[graft.io.TableDdl.repairTable]]),
+  * `ANALYZE TABLE` and `SHOW CREATE TABLE` refuse (statistics live in
+  * per-file sidecars; there is no stored statement), and
+  * `DESCRIBE TABLE EXTENDED` appends the snapshot detail (face, version,
+  * data files, deletion vectors) to Spark's own rows. */
 private[extensions] class DeferredActionStrategy(spark: SparkSession)
     extends SparkStrategy {
+  import org.apache.spark.sql.catalyst.analysis.ResolvedTable
+  import org.apache.spark.sql.catalyst.plans.logical.{AnalyzeTable, DescribeRelation, RepairTable, ShowCreateTable}
+  import graft.catalog.{GraftTable, PlainDirectory}
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case d: DeferredMaintenanceAction =>
       DeferredMaintenanceActionExec(d.name, d.output, d.action) :: Nil
-    case c: GraftDmlCommand =>
-      // same exec node: doExecute runs the action when the command's
-      // RDD assembles — for a Command that is commandExecuted's ONE
-      // eager executeCollect at statement issue
-      DeferredMaintenanceActionExec(c.name, c.output, c.action) :: Nil
+    case RepairTable(ResolvedTable(_, _, t, _), _, _) if pathOf(t).isDefined =>
+      // a Command: the exec runs once, eagerly, at statement issue
+      val path = pathOf(t).get
+      DeferredMaintenanceActionExec(s"repair_table($path)", Nil, () => {
+        graft.io.TableDdl.repairTable(spark, path); Nil }) :: Nil
+    case AnalyzeTable(ResolvedTable(_, _, g: GraftTable, _), _, _) =>
+      throw new IllegalArgumentException(
+        s"ANALYZE TABLE ${g.name()}: statistics live in per-file " +
+          "sidecars, not a catalog — they are written at write time and " +
+          "backfilled with graft.io.FeatherStats backfill; nothing here " +
+          "needs ANALYZE")
+    case ShowCreateTable(ResolvedTable(_, _, g: GraftTable, _), _, _) =>
+      throw new IllegalArgumentException(
+        s"SHOW CREATE TABLE ${g.name()}: there is no stored CREATE " +
+          "statement (a graft table is a path plus manifests) — DESCRIBE " +
+          "TABLE EXTENDED prints the schema, partitioning, and face")
+    case DescribeRelation(ResolvedTable(_, _, g: GraftTable, _), spec, true,
+        output) if spec.isEmpty =>
+      val info = graft.io.TableDdl.describeInfo(spark, g.path)
+      val detail = Seq("Face" -> info.face,
+        "Version" -> info.version.toString,
+        "Data Files" -> info.files.toString,
+        "Deletion Vectors" -> info.dvs.toString).map { case (k, v) =>
+        org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(k),
+          org.apache.spark.unsafe.types.UTF8String.fromString(v), null)
+      }
+      org.apache.spark.sql.execution.LocalTableScanExec(output,
+        org.apache.spark.sql.execution.datasources.v2.DescribeTableExec(
+          output, g, isExtended = true).executeCollect().toSeq ++ detail,
+        None) :: Nil
     case _ => Nil
+  }
+
+  private def pathOf(t: org.apache.spark.sql.connector.catalog.Table)
+      : Option[String] = t match {
+    case g: GraftTable => Some(g.path)
+    case p: PlainDirectory => Some(p.path)
+    case _ => None
   }
 }

@@ -57,13 +57,61 @@ class JaccardThresholdPruning extends Rule[LogicalPlan] {
   }
 }
 
+/** The lossless-or-exact insert rule for graft tables, as a check on
+  * Spark's analyzed INSERT: the ANSI store assignment would silently
+  * narrow (15.5 into a BIGINT column writes 15), while a graft table
+  * takes only exact types and lossless up-casts — the rule of the
+  * engine's own insert API ([[graft.io.TableInserts]]). Inspects only
+  * the casts Spark's output resolver put on the query (tagged
+  * BY_TABLE_INSERTION — a user's explicit CAST is the intended
+  * narrowing); a cast of a string literal (a static PARTITION value) is
+  * exempt. */
+private[extensions] object LosslessGraftInserts extends (LogicalPlan => Unit) {
+  import org.apache.spark.sql.catalyst.plans.logical.{AppendData, OverwriteByExpression, OverwritePartitionsDynamic, Project, V2WriteCommand}
+  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+
+  override def apply(plan: LogicalPlan): Unit = plan.foreach {
+    case w @ (_: AppendData | _: OverwriteByExpression |
+        _: OverwritePartitionsDynamic) =>
+      val cmd = w.asInstanceOf[V2WriteCommand]
+      (cmd.table, cmd.query) match {
+        case (r: DataSourceV2Relation, Project(list, _))
+            if r.table.isInstanceOf[graft.catalog.GraftTable] =>
+          list.foreach(e => castOf(e).foreach { c =>
+            if (!Cast.canUpCast(c.child.dataType, c.dataType))
+              throw new IllegalArgumentException(
+                s"INSERT into ${r.table.name()}: column '${e.name}' " +
+                  s"(${c.dataType.catalogString}) from a " +
+                  s"${c.child.dataType.catalogString} expression — only " +
+                  "exact types and lossless upcasts are applied; cast the " +
+                  "query column explicitly if the narrowing is intended")
+          })
+        case _ => ()
+      }
+    case _ => ()
+  }
+
+  private def castOf(e: Expression): Option[Cast] = e match {
+    case Cast(Literal(_, org.apache.spark.sql.types.StringType), _, _, _) =>
+      None
+    case c: Cast if c.getTagValue(Cast.BY_TABLE_INSERTION).isDefined =>
+      Some(c)
+    case u: UnaryExpression => castOf(u.child)
+    case _ => None
+  }
+}
+
 /** Session extension entry point:
   * `.config("spark.sql.extensions", "graft.extensions.GraftExtensions")`.
   *
   * Besides the optimizer rule, the native codegen expressions are registered
   * as SQL functions, so `spark.sql("SELECT graft_cosine(a, b) ...")` works
   * anywhere the DataFrame builders do — the same dual surface (python API +
-  * libcudf C++ callable) the reference exposes per operator.
+  * libcudf C++ callable) the reference exposes per operator. Table SQL
+  * (reads, INSERT, MERGE/UPDATE/DELETE, DDL) is NOT handled here: it
+  * runs through [[graft.catalog.GraftCatalog]] and Spark's own v2
+  * analysis; this extension only adds the maintenance table functions
+  * and the exec planning for the few v2 commands Spark leaves unplanned.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -80,33 +128,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new JaccardThresholdPruning)
-
-    // SQL MERGE INTO over graft.`/path` / graft_dv.`/path` targets:
-    // Spark's parser builds MergeIntoTable; this rule claims the graft
-    // spellings during resolution (the target stays unresolved for the
-    // catalog, so the fixpoint reaches us before checkAnalysis) and
-    // lowers onto ConditionalMerge, deferred to statement execution.
-    // The builder also stamps the EXPLICIT session marker GraftCatalog
-    // reads to pick its table handle (rule builders run exactly once per
-    // session, when its analyzer is built — strictly before any
-    // loadTable, which runs DURING analysis): stringly class-name
-    // sniffing would silently flip every catalog-only session onto the
-    // wrong handle if the package were ever renamed.
-    ext.injectResolutionRule { s =>
-      s.conf.set(GraftExtensions.ActiveMarker, "true")
-      new GraftMergeIntoRule(s)
-    }
-
-    // SQL reads (head + VERSION/TIMESTAMP AS OF time travel) and
-    // INSERT INTO / INSERT OVERWRITE over the same graft spellings —
-    // registered AFTER the DML rule so a graft-target statement is
-    // already lowered before this rule's read-claiming runs
-    ext.injectResolutionRule(s => new GraftSqlRelationsRule(s))
-
-    // CREATE TABLE / CTAS over graft paths: POST-HOC, necessarily —
-    // Spark's DataSourceAnalysis (earlier in the same post-hoc batch)
-    // is what lowers the statement onto the claimable V1 commands
-    ext.injectPostHocResolutionRule(s => new GraftCreateTableRule(s))
+    ext.injectCheckRule(_ => LosslessGraftInserts)
 
     // the table-maintenance tier's SQL face (CALL-style table functions:
     // OPTIMIZE / ZORDER / VACUUM / RESTORE / expire / history / CDF)
@@ -198,12 +220,4 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.expressions.SimHash(args.head, intLit(args(1), "bits"))
       }))
   }
-}
-
-object GraftExtensions {
-  /** Session-conf marker stamped by the rule builders above — the
-    * explicit "this session carries the graft extension rules" signal
-    * [[graft.catalog.GraftCatalog.isGraftSession]] reads (with an
-    * instance-of fallback for sessions built before the marker landed). */
-  val ActiveMarker = "spark.graft.extensions.active"
 }

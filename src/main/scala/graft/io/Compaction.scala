@@ -18,7 +18,7 @@ private[graft] object Compaction {
                     filesBefore: Int, filesAfter: Int)
 
   /** Face-dispatched compaction — ONE definition shared by the
-    * graft-session TVF (`graft_optimize`) and the catalog-only `CALL
+    * TVF (`graft_optimize`) and the `CALL
     * <catalog>.system.compact` procedure: the face detects from the
     * manifest's suffixes, mixed-suffix manifests fail loudly instead of
     * silently routing to the wrong compactor. */

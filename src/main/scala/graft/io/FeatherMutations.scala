@@ -742,7 +742,27 @@ object FeatherMutations {
   /** The relative DIRECTORY of a manifest rel path ("" for a root
     * file) — ONE definition (this split existed in four private copies,
     * the same drift class hiveLayout/stampLeaves were extracted for). */
-  private[io] def relDirOf(rel: String): String = {
+  /** The merged-stats fold of parts named relative to the table root
+    * (`k=v/part-…` on a hive layout), into each leaf's merged file. */
+  private[graft] def upsertLeafStats(
+      fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      parts: Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])])
+      : Unit =
+    parts.groupBy { case (rel, _) => relDirOf(rel) }
+      .foreach { case (dir, ps) =>
+        FeatherStats.upsertMerged(fs,
+          if (dir.isEmpty) root else new Path(root, dir),
+          ps.map { case (rel, v) => rel.substring(rel.lastIndexOf('/') + 1) -> v })
+      }
+
+  /** [[upsertLeafStats]] over landed (name, bytes, stats json) parts. */
+  private[graft] def upsertLeafStats(fs: org.apache.hadoop.fs.FileSystem,
+                                     root: Path,
+                                     parts: Seq[(String, Long, String)]): Unit =
+    upsertLeafStats(fs, root, parts.map { case (n, len, js) =>
+      n -> (len, FeatherStats.fromJson(js)) }.toMap)
+
+  private[graft] def relDirOf(rel: String): String = {
     val i = rel.lastIndexOf('/')
     if (i < 0) "" else rel.substring(0, i)
   }

@@ -369,12 +369,19 @@ object GraftFeather {
         order.get(fld.getName) match {
           case None => order(fld.getName) = (fld, f, 1, fld.isNullable)
           case Some((prev, prevFile, n, anyNullable)) =>
-            require(toSparkType(prev) == toSparkType(fld),
+            val (pt, ft) = (toSparkType(prev), toSparkType(fld))
+            val nullablePt = org.apache.spark.sql.graft.Bridge.asNullable(pt)
+            require(pt == ft ||
+                nullablePt == org.apache.spark.sql.graft.Bridge.asNullable(ft),
               s"mergeSchema: column '${fld.getName}' is " +
-                s"${toSparkType(prev).catalogString} in $prevFile but " +
-                s"${toSparkType(fld).catalogString} in $f — evolved columns " +
+                s"${pt.catalogString} in $prevFile but " +
+                s"${ft.catalogString} in $f — evolved columns " +
                 "must keep their type")
-            order(fld.getName) = (prev, prevFile, n + 1,
+            // nested nullability may differ between generations (an
+            // array's containsNull): the merged column admits nulls
+            val merged = if (pt == ft) prev
+              else toArrowField(fld.getName, nullablePt, prev.isNullable)
+            order(fld.getName) = (merged, prevFile, n + 1,
               anyNullable || fld.isNullable)
         }
       }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.sources.FeatherSnapshots
 
-/** The DDL statements a snapshot table takes by path — lowered from
-  * Spark's OWN parser plans by [[graft.extensions.GraftSqlRelationsRule]]
-  * and [[graft.extensions.GraftCreateTableRule]]:
+/** The DDL statements a snapshot table takes — the implementations
+  * behind [[graft.catalog.GraftCatalog]] (CREATE, ALTER, the staged
+  * CREATE/REPLACE [AS SELECT] commit), the catalog handle's TRUNCATE,
+  * and the DESCRIBE / MSCK REPAIR execs:
   *
   * {{{
   *   CREATE TABLE graft.`/t` (id BIGINT) [USING face]
@@ -35,6 +36,59 @@ import graft.sources.FeatherSnapshots
   * the drift surface is the helpers, not the call sites. */
 object TableDdl {
   import FeatherMutations.Result
+
+  /** A CREATE/REPLACE's rows: a query the statement writes itself, or
+    * parts the statement's DSv2 tasks already wrote in the table's face
+    * (`land` moves them into the table directory under the commit's
+    * prefix and returns (name, bytes, stats json) per part). */
+  sealed trait Rows { def schema: StructType }
+  final case class QueryRows(df: org.apache.spark.sql.DataFrame)
+      extends Rows { def schema: StructType = df.schema }
+  final case class LandedRows(
+      schema: StructType,
+      land: (org.apache.hadoop.fs.FileSystem, Path, String)
+        => Seq[(String, Long, String)]) extends Rows
+
+  /** A partitioned CREATE/REPLACE's parts: the query routed to its
+    * leaves, or the tasks' routed parts landed; each leaf's merged stats
+    * folded. Refuses a layout with no data columns or no rows. */
+  private def partitionedParts(op: String, fs: org.apache.hadoop.fs.FileSystem,
+                               root: Path, rows: Rows, face: ConnectorFace,
+                               partitionCols: Seq[String], prefix: String,
+                               bad: String => Nothing): Seq[(String, Long)] = {
+    val dataSchema = StructType(rows.schema.fields.filterNot(f =>
+      partitionCols.contains(f.name)))
+    if (dataSchema.isEmpty)
+      bad("the query produces only the partition columns — a hive " +
+        "leaf's files hold the DATA columns (values live in the " +
+        "directory chain)")
+    fs.mkdirs(root)
+    val parts = rows match {
+      case QueryRows(query) =>
+        FeatherMutations.routePartitionedInserts(op, face, fs, root, query,
+          partitionCols, dataSchema, prefix, face.codecFor("lz4"))
+      case LandedRows(_, land) =>
+        val landed = land(fs, root, prefix)
+        FeatherMutations.upsertLeafStats(fs, root, landed)
+        landed.map { case (n, len, _) => (n, len) }
+    }
+    if (parts.isEmpty)
+      bad("the query produced no rows — an empty result cannot define " +
+        "a partitioned layout (no partition values to route)")
+    parts
+  }
+
+  private[graft] def faceOf(fmt: String): ConnectorFace = fmt match {
+    case "parquet" => ConnectorFace.ParquetFace
+    case "graft-avro" => ConnectorFace.AvroFace
+    case _ => ConnectorFace.FeatherFace
+  }
+
+  /** The face a USING clause names (feather when omitted). */
+  private[graft] def faceOf(provider: Option[String], what: String)
+      : ConnectorFace =
+    faceOf(faceFormat(provider, msg =>
+      throw new IllegalArgumentException(s"$what: $msg")))
 
   /** The USING clause names the FACE. The SQL path always arrives with
     * a provider (Spark fills an omitted USING with its own
@@ -90,11 +144,7 @@ object TableDdl {
     // counts data files by the `<prefix>-empty.<ext>` stamp naming, and
     // an empty CREATE routed through a face's ordinary writer would
     // land a part-…​ file that miscounts as data
-    val connFace = fmt match {
-      case "parquet" => ConnectorFace.ParquetFace
-      case "graft-avro" => ConnectorFace.AvroFace
-      case _ => ConnectorFace.FeatherFace
-    }
+    val connFace = faceOf(fmt)
     fs.mkdirs(root)
     val prefix = FeatherSnapshots.runPrefix(1L, "create-")
     val stamp = connFace.stamp(fs, root, prefix, schema)
@@ -134,8 +184,7 @@ object TableDdl {
     * comes from the query. Partitioned CTAS rides the parquet face's
     * partitioned writer (the other faces' partitioned layouts arrive
     * via adopt); IF NOT EXISTS no-ops WITHOUT running the query. */
-  def createTableAs(spark: SparkSession, path: String,
-                    query: org.apache.spark.sql.DataFrame,
+  def createTableAs(spark: SparkSession, path: String, rows: Rows,
                     provider: Option[String], partitionCols: Seq[String],
                     ifNotExists: Boolean): Result = {
     val op = "CREATE TABLE AS SELECT"
@@ -151,38 +200,39 @@ object TableDdl {
       val snap = FeatherSnapshots.resolve(fs, root, None).get
       return Result(snap.version, 0, snap.files.size, 0)
     }
-    partitionCols.filterNot(query.columns.contains).headOption.foreach(
+    val columns = rows.schema.fieldNames
+    partitionCols.filterNot(columns.contains).headOption.foreach(
       c => bad(s"PARTITIONED BY names '$c', which the query does not " +
-        s"produce (${query.columns.mkString(", ")})"))
+        s"produce (${columns.mkString(", ")})"))
     requireFreshDir(fs, root, bad)
-    if (partitionCols.isEmpty || fmt == "parquet")
-      // flat any-face, and parquet-face partitioned (Spark's own
-      // partitioned sink through ParquetTable.write)
-      writeByFace(spark, path, query, fmt, partitionCols)
-    else {
-      // feather/avro partitioned CTAS: rows route to their key=value
-      // leaves through the engine's shared insert routing (the same
-      // path every partitioned INSERT/MERGE takes), then ONE v1 commit
-      val connFace =
-        if (fmt == "graft-avro") ConnectorFace.AvroFace
-        else ConnectorFace.FeatherFace
-      val dataSchema = StructType(query.schema.fields.filterNot(f =>
-        partitionCols.contains(f.name)))
-      if (dataSchema.isEmpty)
-        bad("the query produces only the partition columns — a hive " +
-          "leaf's files hold the DATA columns (values live in the " +
-          "directory chain)")
-      fs.mkdirs(root)
-      val prefix = FeatherSnapshots.runPrefix(1L, "ctas-")
-      val parts = FeatherMutations.routePartitionedInserts(op, connFace,
-        fs, root, query, partitionCols, dataSchema, prefix,
-        connFace.codecFor("lz4"))
-      if (parts.isEmpty)
-        bad("the query produced no rows — an empty frame cannot define " +
-          "a partitioned table (no partition values to route)")
-      FeatherSnapshots.publishDataCommit(fs, root, truncate = false,
-        Seq(connFace.suffix), parts,
-        stampPart = () => connFace.stamp(fs, root, prefix, dataSchema)): Unit
+    val connFace = faceOf(fmt)
+    rows match {
+      case LandedRows(schema, land) if partitionCols.isEmpty =>
+        // the statement's tasks already wrote the face's parts: land
+        // them under the v1 prefix and publish ONE v1 commit
+        fs.mkdirs(root)
+        val prefix = FeatherSnapshots.runPrefix(1L, "ctas-")
+        val parts = land(fs, root, prefix)
+        FeatherMutations.upsertLeafStats(fs, root, parts)
+        FeatherSnapshots.publishDataCommit(fs, root, truncate = false,
+          Seq(connFace.suffix), parts.map { case (n, len, _) => (n, len) },
+          stampPart = () => connFace.stamp(fs, root, prefix, schema)): Unit
+      case QueryRows(query) if partitionCols.isEmpty || fmt == "parquet" =>
+        // flat any-face, and parquet-face partitioned (Spark's own
+        // partitioned sink through ParquetTable.write)
+        writeByFace(spark, path, query, fmt, partitionCols)
+      case _ =>
+        // partitioned CTAS on feather/avro (and task-landed parts on any
+        // face): rows route to their key=value leaves through the
+        // engine's shared insert routing (the same path every
+        // partitioned INSERT/MERGE takes), then ONE v1 commit
+        val prefix = FeatherSnapshots.runPrefix(1L, "ctas-")
+        FeatherSnapshots.publishDataCommit(fs, root, truncate = false,
+          Seq(connFace.suffix), partitionedParts(op, fs, root, rows,
+            connFace, partitionCols, prefix, bad),
+          stampPart = () => connFace.stamp(fs, root, prefix,
+            StructType(rows.schema.fields.filterNot(f =>
+              partitionCols.contains(f.name))))): Unit
     }
     val v1 = FeatherSnapshots.resolve(fs, root, None).get
     Result(v1.version, 0, 0, v1.files.size)
@@ -212,8 +262,7 @@ object TableDdl {
     * schema-only / zero-row shapes refuse (no partition values to
     * route; TRUNCATE keeps the existing layout and removes the rows). */
   def replaceTable(spark: SparkSession, path: String,
-                   schemaOrQuery: Either[StructType,
-                     org.apache.spark.sql.DataFrame],
+                   schemaOrQuery: Either[StructType, Rows],
                    provider: Option[String], partitionCols: Seq[String],
                    orCreate: Boolean): Result = {
     val op = if (orCreate) "CREATE OR REPLACE TABLE" else "REPLACE TABLE"
@@ -240,41 +289,27 @@ object TableDdl {
       }
     }
     val snap = FeatherSnapshots.resolve(fs, root, None).get
-    val connFace = fmt match {
-      case "parquet" => ConnectorFace.ParquetFace
-      case "graft-avro" => ConnectorFace.AvroFace
-      case _ => ConnectorFace.FeatherFace
-    }
+    val connFace = faceOf(fmt)
     val targetV = snap.version + 1
     val prefix = FeatherSnapshots.runPrefix(targetV, "rep-")
     val schema = schemaOrQuery.fold(identity, _.schema)
     if (schema.isEmpty) bad("no columns")
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     if (partitionCols.nonEmpty) {
-      val q = schemaOrQuery.toOption.get
-      partitionCols.filterNot(q.columns.contains).headOption.foreach(
-        c => bad(s"PARTITIONED BY names '$c', which the query does not " +
-          s"produce (${q.columns.mkString(", ")})"))
-      val dataSchema = StructType(schema.fields.filterNot(f =>
-        partitionCols.contains(f.name)))
-      if (dataSchema.isEmpty)
-        bad("the query produces only the partition columns — a hive " +
-          "leaf's files hold the DATA columns")
-      added ++= FeatherMutations.routePartitionedInserts(op, connFace,
-        fs, root, q, partitionCols, dataSchema, prefix,
-        connFace.codecFor("lz4"))
-      if (added.isEmpty)
-        bad("the query produced no rows — an empty result cannot " +
-          "define a partitioned layout (TRUNCATE TABLE keeps the " +
-          "existing layout and removes the rows)")
-    } else schemaOrQuery.foreach { q =>
-      val parts = connFace.writeParts(
-        q.coalesce(ConnectorFace.capWriteParts(q)), root.toString,
-        prefix, "lz4")
-      if (parts.nonEmpty)
-        FeatherStats.upsertMerged(fs, root,
-          parts.map { case (name, len, js) =>
-            name -> (len, FeatherStats.fromJson(js)) }.toMap)
+      val rows = schemaOrQuery.toOption.get
+      partitionCols.filterNot(schema.fieldNames.contains).headOption
+        .foreach(c => bad(s"PARTITIONED BY names '$c', which the query " +
+          s"does not produce (${schema.fieldNames.mkString(", ")})"))
+      added ++= partitionedParts(op, fs, root, rows, connFace,
+        partitionCols, prefix, bad)
+    } else schemaOrQuery.foreach { rows =>
+      val parts = rows match {
+        case QueryRows(q) => connFace.writeParts(
+          q.coalesce(ConnectorFace.capWriteParts(q)), root.toString,
+          prefix, "lz4")
+        case LandedRows(_, land) => land(fs, root, prefix)
+      }
+      FeatherMutations.upsertLeafStats(fs, root, parts)
       added ++= parts.map { case (name, len, _) => (name, len) }
     }
     // empty FLAT replace (schema-only, or a zero-row query): v+1 is one
@@ -383,20 +418,6 @@ object TableDdl {
     val v = FeatherSnapshots.adopt(fs, root, seen.toSeq)
     val snap = FeatherSnapshots.resolve(fs, root, None).get
     Result(v, 0, snap.files.size, 0)
-  }
-
-  /** `SHOW PARTITIONS graft.`/t`` — the table's hive leaf directories,
-    * straight off the manifest (no listing), in Spark's k=v/k2=v2 row
-    * shape. Metadata-only, like DESCRIBE. */
-  def showPartitions(spark: SparkSession, path: String): Seq[String] = {
-    val r = FeatherMutations.resolveTable(spark, path, "SHOW PARTITIONS",
-      requireHive = false,
-      snapshotsHint = "SHOW PARTITIONS targets a snapshot table",
-      checkEmbedded = false)
-    require(r.partitioned,
-      s"SHOW PARTITIONS on graft.`$path`: the table is not partitioned")
-    r.snap.files.map(f => FeatherMutations.relDirOf(f._1))
-      .filter(_.nonEmpty).distinct.sorted
   }
 
   /** TRUNCATE TABLE — ONE commit removes every data file while the

@@ -1358,12 +1358,11 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL MERGE INTO (extensions/GraftMergeInto): the statement CDC
-  // pipelines actually write, parsed by Spark's own grammar and lowered
-  // by the injected resolution rule onto ConditionalMerge — full clause
-  // matrix incl. WHEN NOT MATCHED BY SOURCE, executed at statement
-  // collect (the deferred maintenance contract). Same relational-CTE
-  // oracle shape as io_merge_clauses.
+  // SQL MERGE INTO (GraftCatalog's row-level rewrite): the statement
+  // CDC pipelines actually write, parsed and analyzed by Spark itself —
+  // full clause matrix incl. WHEN NOT MATCHED BY SOURCE, executed once
+  // at statement issue. Same relational-CTE oracle shape as
+  // io_merge_clauses.
   register("io_sql_merge",
     """WITH t AS (
       |  SELECT o_orderkey, o_orderpriority, CAST(o_totalprice AS DOUBLE) AS total
@@ -1472,10 +1471,9 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL DELETE FROM (extensions/GraftMergeInto lowerDelete →
-  // io/PredicateMutations.deleteWhere): predicate delete, candidates
-  // pruned by stats/partition values, copy-on-write rewrite of the
-  // touched files only. Completes the SQL DML triad with MERGE/UPDATE.
+  // SQL DELETE FROM (GraftCatalog's row-level rewrite): predicate
+  // delete, groups pruned by stats/partition values, copy-on-write
+  // rewrite of the touched files only. Completes the SQL DML triad with MERGE/UPDATE.
   register("io_sql_delete",
     """SELECT o_orderkey, o_orderpriority,
       |  CAST(o_totalprice AS DOUBLE) AS total
@@ -1623,7 +1621,7 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL TIME TRAVEL (extensions/GraftSqlRelations → io/TableReads):
+  // SQL TIME TRAVEL (GraftCatalog's VERSION/TIMESTAMP AS OF loadTable):
   // `VERSION AS OF n` and the plain head read, BOTH in one statement —
   // the v1 read anti-joins the head, returning exactly the rows the
   // intervening DELETE removed (the audit query a takedown review runs).
@@ -1653,7 +1651,7 @@ object IoQueries extends QueryPack {
          |ORDER BY v.o_orderkey""".stripMargin)
   }
 
-  // SQL INSERT INTO (extensions/GraftSqlRelations → io/TableInserts)
+  // SQL INSERT INTO (GraftCatalog's batch write, FaceBatchWrite)
   // over a HIVE-PARTITIONED parquet table: the positional statement
   // routes each row to the leaf its LAST column names; the static
   // `PARTITION (k=v)` spelling pins the partition for every row. Both
@@ -1868,7 +1866,7 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL DDL (io/TableDdl via GraftSqlRelationsRule): TRUNCATE TABLE +
+  // SQL DDL (GraftCatalog onto io/TableDdl): TRUNCATE TABLE +
   // ALTER TABLE ADD COLUMNS, chained with INSERTs — truncate empties in
   // one manifest commit (schema survives via stamps), the ALTER evolves
   // without touching data (pre-evolution rows read the new column as
@@ -1910,10 +1908,10 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL CREATE TABLE + CTAS (io/TableDdl via GraftCreateTableRule):
-  // the statement set's birth end — a CTAS through the V2 claim path
-  // (USING feather, a DSv2 provider) and a plain CREATE through the V1
-  // claim path (the default provider), each then taking INSERTs. The
+  // SQL CREATE TABLE + CTAS (GraftCatalog onto io/TableDdl): the
+  // statement set's birth end — a CTAS through the staged commit (USING
+  // feather) and a plain CREATE (the default provider), each then
+  // taking INSERTs. The
   // oracle is the UNION reconstruction of both tables' content.
   register("io_sql_create",
     """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
@@ -1949,7 +1947,7 @@ object IoQueries extends QueryPack {
   }
 
   // NAME-based addressing through the DSv2 GraftCatalog
-  // (catalog/GraftCatalog.scala + the extension rules' V2 claims):
+  // (catalog/GraftCatalog.scala):
   // CREATE by catalog name under the warehouse, INSERT, MERGE, and a
   // VERSION AS OF read all resolve the NAME through Spark's public
   // catalog machinery — no path spelled anywhere. The pinned version is

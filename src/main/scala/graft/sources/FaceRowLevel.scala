@@ -11,9 +11,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
 
-/** FACE-GENERIC DSv2 row-level machinery — what lifts the r17
-  * feather-only, flat-only restrictions off the catalog-only DML path:
-  * DELETE / UPDATE / MERGE by name in an extension-free session now run
+/** FACE-GENERIC DSv2 row-level machinery — DELETE / UPDATE / MERGE run
   * on EVERY face (feather / parquet / avro) and on hive-partitioned
   * layouts, through one scan/write pair programmed against
   * [[graft.io.ConnectorFace]] (the same per-format adapter the
@@ -33,22 +31,15 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * session's engine paths (vectorized parquet scan, split avro reads)
   * stay the performance path.
   *
-  * The WRITES land each task's rows as TMP FEATHER parts (the engine's
-  * one universal task-side row writer), and the driver-side commit
-  * converts them into final face parts in one distributed pass —
-  * [[ConnectorFace.writeParts]] for flat tables,
-  * [[FeatherMutations.routePartitionedInserts]] for hive layouts (rows
-  * route to the leaf their partition VALUES name, so an UPDATE that
-  * changes a partition column moves the row between leaves inside the
-  * one atomic commit). The manifest commit then swaps groups (COW) or
-  * binds deletion vectors (delta) exactly like the feather-only paths;
-  * tmp parts are deleted either way, and a failed commit unwinds the
-  * converted parts and fresh DV sidecars.
-  *
-  * Cost honesty: rewritten/inserted rows are written twice (tmp feather,
-  * then the face part). Bytes ∝ the statement's own output — never the
-  * table — and the conversion is one extra job per STATEMENT, not per
-  * file. */
+  * The WRITES go through [[FaceTaskWriters]]: feather and parquet
+  * tables get their final parts from the writer tasks in one pass (the
+  * commit only renames them; on a hive layout each row goes to the leaf
+  * its partition VALUES name, so an UPDATE that changes a partition
+  * column moves the row between leaves inside the one atomic commit);
+  * avro tables land tmp feather parts that the commit converts in one
+  * distributed pass. The manifest commit then swaps groups (COW) or
+  * binds deletion vectors (delta); tmp parts are deleted either way, and
+  * a failed commit unwinds the final parts and fresh DV sidecars. */
 private[graft] object FaceRowLevel {
   /** One operation per (command, strategy): group-based COW for the
     * `graft` catalog, delta (DV sidecars) for `graft_dv`. */
@@ -111,9 +102,9 @@ private class FaceDeltaOperation(cmd: Command, path: String,
 // ---------------------------------------------------------------------------
 
 /** `host = Some(op)`: a row-level read (records the scan state the write
-  * commits against). `host = None`: the catalog-only BATCH-read fallback
-  * for faces without a DSv2 delegate (the parquet face) — same reader,
-  * optional time-travel pin. */
+  * commits against). `host = None`: the BATCH read for faces without a
+  * DSv2 delegate (the parquet face) — same reader, optional time-travel
+  * pin. */
 private[graft] class FaceScanBuilder(host: Option[FeatherRowLevelHost],
                                      face: ConnectorFace, path: String,
                                      fullSchema: StructType,
@@ -317,12 +308,211 @@ private class FaceReaderFactory(
 // writes
 // ---------------------------------------------------------------------------
 
-/** Shared driver-side conversion: read the tasks' tmp feather parts and
-  * land them as FINAL face parts (flat: one writeParts pass; hive: rows
-  * route to the leaf their partition values name). Returns the (rel
-  * name, len) parts plus the flat parts' merged-stats fold input —
-  * the CALLER upserts after its manifest commit. Tmp parts are deleted
-  * here, success or not (they were never visible). */
+/** The task-side part writers of the engine's DSv2 writes (inserts,
+  * row-level rewrites, staged CREATE/REPLACE). Feather and parquet
+  * tables get their FINAL parts from the writer tasks in one pass: the
+  * tasks write hidden tmp parts in the table's own face (feather: the
+  * Arrow IPC part writer; parquet: Spark's parquet OutputWriter) —
+  * routed to their hive leaves by [[RoutedWriterFactory]] on a
+  * partitioned layout — and the commit only renames them. Avro has no
+  * task-side writer: its tasks land tmp FEATHER parts that
+  * [[FaceConvert]] rewrites. */
+private[sources] object FaceTaskWriters {
+  /** Whether the tasks write final-format parts (commit = rename). */
+  def native(face: ConnectorFace): Boolean = !(face eq ConnectorFace.AvroFace)
+
+  /** Every tmp part a write's tasks reported (a routed task reports one
+    * per leaf it wrote). */
+  def parts(messages: Seq[WriterCommitMessage]): Seq[FeatherCommitMessage] =
+    messages.flatMap {
+      case m: FeatherCommitMessage => Seq(m)
+      case r: RoutedCommitMessage => r.parts
+      case _ => Nil
+    }
+
+  /** Fails on an unwritable schema BEFORE tasks launch. Every part is
+    * written with all columns nullable (the file-source convention), so
+    * parts of one table never differ by a literal's non-null footer. */
+  def factory(spark: SparkSession, face: ConnectorFace,
+              partCols: Seq[String], st: StructType,
+              dir: String): DataWriterFactory =
+    if (!native(face)) featherFactory(spark, st, dir)
+    else {
+      val dataSt = StructType(st.fields.filterNot(f =>
+        partCols.contains(f.name)))
+      val leaves =
+        if (face eq ConnectorFace.ParquetFace)
+          ParquetTaskWriterFactory(spark, dataSt, dir)
+        else featherFactory(spark, dataSt, dir)
+      if (partCols.isEmpty) leaves
+      else new RoutedWriterFactory(st, partCols, dir, leaves)
+    }
+
+  /** The tmp-feather task writer (every face's conversion input). */
+  def featherFactory(spark: SparkSession, st: StructType,
+                     dir: String): DirWriterFactory = {
+    val schema = org.apache.spark.sql.graft.Bridge.asNullable(st)
+    FaceConvert.requireFeatherMappable(schema)
+    new FeatherWriterFactory(schema, dir, "lz4", 4096,
+      GraftHadoop.confBroadcast(spark))
+  }
+
+  /** Tmp-part messages (zero-row ones already dropped by the caller) →
+    * (final parts, the DEFERRED flat merged-stats fold input). */
+  def finalizeParts(opName: String, face: ConnectorFace,
+                    fs: org.apache.hadoop.fs.FileSystem, path: String,
+                    msgs: Seq[FeatherCommitMessage], dataSchema: StructType,
+                    partCols: Seq[String], targetV: Long)
+      : (Seq[(String, Long)],
+         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) =
+    if (native(face)) {
+      val renamed = FeatherDsvWrites.renameParts(fs, path, msgs, face.suffix)
+      (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
+    } else
+      FaceConvert.toFaceParts(opName, face, fs, path, msgs, dataSchema,
+        partCols, targetV)
+}
+
+/** The parquet task writer: Spark's own parquet OutputWriter (the sink
+  * `df.write.parquet` uses) prepared once on the driver, so a task's
+  * part carries exactly the footer the face's other writers produce —
+  * every column nullable (the sink's convention) and TIMESTAMP_MICROS
+  * (the parquet table tier's pin, [[graft.io.GraftParquet]]). The commit
+  * message carries the footer-derived stats sidecar content. */
+private[sources] object ParquetTaskWriterFactory {
+  def apply(spark: SparkSession, st: StructType,
+            dir: String): ParquetTaskWriterFactory = {
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.graft.Bridge.asNullable(st)
+    val base = spark.sparkContext.hadoopConfiguration
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      new org.apache.hadoop.conf.Configuration(base))
+    val out = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().prepareWrite(spark, job,
+        Map("compression" -> "snappy"), schema)
+    val conf = job.getConfiguration
+    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // ship only what the prepare step changed; the base conf rides the
+    // session's one conf broadcast
+    val extra = conf.iterator().asScala.map(e => e.getKey -> e.getValue)
+      .filter { case (k, v) => base.get(k) != v }.toMap
+    new ParquetTaskWriterFactory(schema, dir, out, extra,
+      GraftHadoop.confBroadcast(spark))
+  }
+}
+
+private[sources] class ParquetTaskWriterFactory(
+    st: StructType, dir: String,
+    out: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+    extra: Map[String, String],
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    extends DirWriterFactory {
+  override def inDir(d: String): DirWriterFactory =
+    new ParquetTaskWriterFactory(st, d, out, extra, confMap)
+  override def createWriter(partitionId: Int, taskId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
+    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+      import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+      private val tmpName = f".part-$partitionId%05d-task-$taskId.parquet.tmp"
+      private val conf = {
+        val c = new org.apache.hadoop.conf.Configuration(
+          GraftHadoop.execConf(confMap))
+        extra.foreach { case (k, v) => c.set(k, v) }
+        c
+      }
+      private val file = new org.apache.hadoop.fs.Path(dir, tmpName)
+      private val writer = out.newInstance(file.toString, st,
+        new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
+          new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP,
+            partitionId), 0)))
+      override def write(row: InternalRow): Unit = writer.write(row)
+      override def commit(): WriterCommitMessage = {
+        writer.close()
+        FeatherCommitMessage(tmpName, partitionId,
+          FeatherStats.toJson(
+            graft.io.GraftParquet.footerBatches(conf, file.toString)),
+          file.getFileSystem(conf).getFileStatus(file).getLen)
+      }
+      override def abort(): Unit = {
+        try writer.close() catch { case _: Exception => () }
+        try file.getFileSystem(conf).delete(file, false)
+        catch { case _: Exception => () }
+        ()
+      }
+      override def close(): Unit = () // commit/abort own the file
+    }
+}
+
+/** A task writer factory that can write the same parts into another
+  * directory (a hive leaf). */
+private[sources] trait DirWriterFactory extends DataWriterFactory {
+  def inDir(dir: String): DirWriterFactory
+}
+
+/** One routed task's parts, one per hive leaf it wrote; each part's
+  * tmp name is relative to the table root (`k=v/.part-…`). */
+private[sources] case class RoutedCommitMessage(parts: Seq[FeatherCommitMessage])
+    extends WriterCommitMessage
+
+/** Hive-layout task writer: each row goes to the leaf its partition
+  * VALUES name (Spark's hive escaping, the null marker for a null — the
+  * same leaf naming as [[FeatherMutations.routePartitionedInserts]]),
+  * through one lazily opened part writer per leaf, holding the DATA
+  * columns only (partition values live in the directory chain). */
+private[sources] class RoutedWriterFactory(st: StructType,
+                                           partCols: Seq[String],
+                                           root: String,
+                                           leaves: DirWriterFactory)
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
+    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+      private val partIdx = partCols.map(st.fieldIndex)
+      private val toScala = partIdx.map(i =>
+        CatalystTypeConverters.createToScalaConverter(st(i).dataType))
+      private val data = UnsafeProjection.create(st.fields.indices
+        .filterNot(partIdx.contains)
+        .map(i => BoundReference(i, st(i).dataType, st(i).nullable)))
+      private val open = scala.collection.mutable.LinkedHashMap
+        .empty[String, org.apache.spark.sql.connector.write.DataWriter[InternalRow]]
+      private def leafOf(row: InternalRow): String =
+        partCols.indices.map { j =>
+          val raw = row.get(partIdx(j), st(partIdx(j)).dataType)
+          val v = if (raw == null) null else toScala(j)(raw).toString
+          if (v == FeatherPartitions.HiveNull)
+            throw new IllegalArgumentException(
+              s"partition value for '${partCols(j)}' is the literal hive " +
+                s"null marker '$v' — it would be unreadable as anything " +
+                "but NULL; use an actual null")
+          s"${FeatherPartitions.escapePath(partCols(j))}=" +
+            (if (v == null) FeatherPartitions.HiveNull
+             else FeatherPartitions.escapePath(v))
+        }.mkString("/")
+      override def write(row: InternalRow): Unit = {
+        val leaf = leafOf(row)
+        open.getOrElseUpdate(leaf,
+          leaves.inDir(new org.apache.hadoop.fs.Path(root, leaf).toString)
+            .createWriter(partitionId, taskId)).write(data(row))
+      }
+      override def commit(): WriterCommitMessage =
+        RoutedCommitMessage(open.toSeq.map { case (leaf, w) =>
+          val m = w.commit().asInstanceOf[FeatherCommitMessage]
+          m.copy(tmpName = s"$leaf/${m.tmpName}")
+        })
+      override def abort(): Unit = open.values.foreach(w =>
+        try w.abort() catch { case _: Exception => () })
+      override def close(): Unit = ()
+    }
+}
+
+/** Shared driver-side conversion for the tasks that land tmp FEATHER
+  * parts (see [[FaceTaskWriters]]): read them and land FINAL face parts
+  * (flat: one writeParts pass; hive: rows route to the leaf their
+  * partition values name). Returns the (rel name, len) parts plus the
+  * flat parts' merged-stats fold input — the CALLER upserts after its
+  * manifest commit. Tmp parts are deleted here, success or not (they
+  * were never visible). */
 private object FaceConvert {
   def toFaceParts(op: String, face: ConnectorFace,
                   fs: org.apache.hadoop.fs.FileSystem, path: String,
@@ -377,42 +567,25 @@ private object FaceConvert {
       GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
 }
 
-/** Group-based COW write — ONE commit protocol for the feather-native
-  * and face-generic paths (finalize first: a MERGE into a fully-pruned
-  * table still publishes its NOT MATCHED inserts; no-read no-write
-  * statements publish NO version; unwind on a lost conflict check).
-  * Only [[finalizeInserts]] differs per path: the generic one converts
-  * tmp feathers to face parts, [[FeatherCowWrite]] renames them in
-  * place (zero-copy — flat feather tables never pay the conversion). */
+/** Group-based COW write — ONE commit protocol for every face and
+  * layout (finalize first: a MERGE into a fully-pruned table still
+  * publishes its NOT MATCHED inserts; no-read no-write statements
+  * publish NO version; unwind on a lost conflict check). Inserted rows
+  * finalize through [[FaceTaskWriters]]. */
 private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
                                     st: StructType,
                                     path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String])
     extends WriteBuilder with Write with BatchWrite {
-  FaceConvert.requireFeatherMappable(st)
-
-  /** tmp-part messages (zero-row ones already dropped by the caller) →
-    * (final parts, the DEFERRED flat merged-stats fold input). */
-  protected def finalizeInserts(fs: org.apache.hadoop.fs.FileSystem,
-                                msgs: Seq[FeatherCommitMessage],
-                                opName: String, targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) =
-    FaceConvert.toFaceParts(opName, face, fs, path, msgs, dataSchema,
-      partCols, targetV)
-
   override def build(): Write = this
   override def toBatch: BatchWrite = this
   override def description(): String =
     s"graft COW ${op.command()} $path (${face.label})"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = {
-    val spark = SparkSession.active
-    new FeatherWriterFactory(st, path, "lz4", 4096,
-      GraftHadoop.confBroadcast(spark))
-  }
+      : DataWriterFactory =
+    FaceTaskWriters.factory(SparkSession.active, face, partCols, st, path)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -421,7 +594,7 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
     val state = op.scanState.getOrElse(throw new IllegalStateException(
       s"row-level ${op.command()} on $path: write committed before the " +
         "scan planned — the group set is unknown"))
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
+    val committed = FaceTaskWriters.parts(messages.toSeq)
     val (data, empty) = committed.partition(m =>
       FeatherStats.fromJson(m.statsJson).nonEmpty)
     empty.foreach { m =>
@@ -431,7 +604,8 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
     if (state.keptRel.isEmpty && data.isEmpty) return
     val opName = s"rowlevel_${op.command().toString.toLowerCase}"
     val targetV = state.snap.version + 1
-    val (parts, flatStats) = finalizeInserts(fs, data.toSeq, opName, targetV)
+    val (parts, flatStats) = FaceTaskWriters.finalizeParts(opName, face, fs,
+      path, data.toSeq, dataSchema, partCols, targetV)
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     added ++= parts
     if (added.isEmpty &&
@@ -448,28 +622,29 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
       FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
       throw e
     }
-    if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
+    // after the manifest commit: a lost conflict check never strands
+    // merged-stats entries for parts that did not publish
+    FeatherMutations.upsertLeafStats(fs, root, flatStats)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
+    FaceTaskWriters.parts(messages.toSeq).foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
   }
 }
 
-/** Delta write — ONE commit protocol for the feather-native and
-  * face-generic merge-on-read paths: deleted rows → DV sidecars
-  * (per-face position encodings ride [[ConnectorFace.fileRowsPos]] on
-  * the way in and the faces' DV-aware reads on the way out), inserted
-  * rows → final parts through [[finalizeInserts]] (generic: tmp-feather
-  * conversion; [[FeatherDeltaWrite]]: zero-copy rename), one atomic
-  * manifest commit, full unwind (parts, sidecars, fresh DVs, leaf-stats
-  * entries) when the conflict check loses. */
+/** Delta write — ONE commit protocol for every face's merge-on-read
+  * path: deleted rows → DV sidecars (per-face position encodings ride
+  * [[ConnectorFace.fileRowsPos]] on the way in and the faces' DV-aware
+  * reads on the way out), inserted rows → final parts through
+  * [[FaceTaskWriters]], one atomic manifest commit, full unwind (parts,
+  * sidecars, fresh DVs, leaf-stats entries) when the conflict check
+  * loses. */
 private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
                                       info: LogicalWriteInfo,
                                       path: String, face: ConnectorFace,
@@ -481,15 +656,6 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
   private val rowIdSchema: StructType = info.rowIdSchema().orElseThrow(() =>
     new IllegalStateException(
       s"delta ${op.command()} on $path: Spark supplied no rowId schema"))
-  FaceConvert.requireFeatherMappable(rowSchema)
-
-  protected def finalizeInserts(fs: org.apache.hadoop.fs.FileSystem,
-                                msgs: Seq[FeatherCommitMessage],
-                                opName: String, targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) =
-    FaceConvert.toFaceParts(opName, face, fs, path, msgs, dataSchema,
-      partCols, targetV)
 
   override def build(): DeltaWrite = this
   override def toBatch(): DeltaBatchWrite = this
@@ -497,11 +663,10 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
     s"graft delta ${op.command()} $path (${face.label})"
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
-      : DeltaWriterFactory = {
-    val spark = SparkSession.active
-    new FeatherDeltaWriterFactory(rowSchema, rowIdSchema, path,
-      GraftHadoop.confBroadcast(spark))
-  }
+      : DeltaWriterFactory =
+    new FeatherDeltaWriterFactory(rowIdSchema,
+      FaceTaskWriters.factory(SparkSession.active, face, partCols,
+        rowSchema, path))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -526,7 +691,7 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
       byFid.getOrElseUpdate(relIdx(rel),
         scala.collection.mutable.ArrayBuffer.empty[Long]) ++= poss
     })
-    val (insertMsgs, emptyIns) = msgs.flatMap(_.insert).toSeq
+    val (insertMsgs, emptyIns) = FaceTaskWriters.parts(msgs.flatMap(_.insert).toSeq)
       .partition(m => FeatherStats.fromJson(m.statsJson).nonEmpty)
     emptyIns.foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
@@ -538,8 +703,8 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
     val targetV = state.snap.version + 1
     val opName =
       s"rowlevel_delta_${op.command().toString.toLowerCase}"
-    val (parts, flatStats) =
-      finalizeInserts(fs, insertMsgs, opName, targetV)
+    val (parts, flatStats) = FaceTaskWriters.finalizeParts(opName, face,
+      fs, path, insertMsgs, dataSchema, partCols, targetV)
     // exact row counts (stats sidecars) let fully-masked files DROP from
     // the manifest instead of carrying a 100%-coverage vector — loads
     // are bounded by the TOUCHED file set, not the table
@@ -581,15 +746,18 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
       }
       throw e
     }
-    if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
+    // after the manifest commit: a lost conflict check never strands
+    // merged-stats entries for parts that did not publish
+    FeatherMutations.upsertLeafStats(fs, root, flatStats)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherDeltaCommitMessage => m }
-      .flatMap(_.insert).foreach { m =>
+    FaceTaskWriters.parts(messages.toSeq.collect {
+        case m: FeatherDeltaCommitMessage => m }.flatMap(_.insert))
+      .foreach { m =>
         try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
         catch { case _: Exception => () }
       }

@@ -6,19 +6,20 @@ import org.apache.spark.sql.types.StructType
 
 import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftHadoop}
 
-/** FACE-GENERIC catalog-only batch WRITE — the insert half of the r18
-  * interop surface ([[FaceScanBuilder]] is the read half): what lets an
-  * extension-free session run `INSERT INTO` / `INSERT OVERWRITE` by name
-  * against tables the connector delegates cannot serve — the parquet
+/** FACE-GENERIC batch WRITE — the insert half of the catalog's table
+  * handle ([[FaceScanBuilder]] is the read half): `INSERT INTO` /
+  * `INSERT OVERWRITE` against tables the connector delegates cannot
+  * serve — the parquet
   * face (no DSv2 connector) and HIVE-PARTITIONED tables on any face
   * (the flat connector sinks refuse root appends into key=value
   * layouts; this write routes each row to the leaf its partition values
   * name, through the engine's shared
   * [[FeatherMutations.routePartitionedInserts]]).
   *
-  * Task rows land as tmp feather parts (the engine's universal task
-  * writer) and ONE driver-side conversion pass turns them into final
-  * face parts; the manifest commit then publishes:
+  * Task rows land through [[FaceTaskWriters]] (feather/parquet: final
+  * parts in one pass, routed to their leaves on a hive layout; avro:
+  * tmp feather parts and ONE driver-side conversion pass); the manifest
+  * commit then publishes:
   *
   *  - append (`INSERT INTO`): add-only — commutes with every concurrent
   *    commit (empty read set); a zero-row insert publishes NO version.
@@ -28,14 +29,14 @@ import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftHadoop}
   *  - static partition overwrite (`INSERT OVERWRITE ... PARTITION
   *    (k=v)`): the filters Spark hands down are EqualTo on partition
   *    columns — leaves whose values match are replaced, everything else
-  *    carries through verbatim. Any other filter shape refuses loudly
-  *    (deleting by a non-partition predicate is the row-level DML
-  *    tier's job, not the insert sink's).
-  *  - dynamic partition overwrite: only the leaf directories the query's
-  *    rows actually land in are replaced (Spark/Hive dynamic semantics).
-  *
-  * In a graft session none of this runs — the extension rules claim the
-  * insert plans at analysis and lower onto the engine's own paths. */
+  *    carries through verbatim.
+  *  - predicate overwrite (`writeTo(t).overwrite(condition)` on any
+  *    other filter): exactly replaceWhere — the rows matching the
+  *    condition are deleted and the query's rows inserted, one atomic
+  *    commit through [[graft.io.PredicateMutations.replaceWhere]].
+  *  - dynamic partition overwrite: only the leaves the query's rows
+  *    land in are replaced (Spark/Hive dynamic semantics), matched by
+  *    TYPED partition value (an adopted `day=07` leaf is partition 7). */
 private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String],
@@ -43,15 +44,25 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     extends WriteBuilder with Write with BatchWrite
     with org.apache.spark.sql.connector.write.SupportsOverwrite
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
-  FaceConvert.requireFeatherMappable(writeSchema)
 
-  /** append | truncate | static (with leaf-equality filters) | dynamic */
+  /** append | truncate | static (leaf-equality filters) | where | dynamic */
   private var mode: String = "append"
   private var staticFilters: Seq[(String, Any)] = Seq.empty
+  private var whereFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil
 
   override def truncate(): WriteBuilder = { mode = "truncate"; this }
 
   override def overwriteDynamicPartitions(): WriteBuilder = {
+    // writeTo(t).overwritePartitions() arrives here whatever the
+    // session's mode; the SQL INSERT OVERWRITE spelling only under
+    // dynamic — keep both spellings scoped by the one conf
+    if (!SparkSession.active.conf.get(
+        "spark.sql.sources.partitionOverwriteMode", "static")
+        .equalsIgnoreCase("dynamic"))
+      throw new IllegalArgumentException(
+        s"overwritePartitions on graft table $path: set " +
+          "spark.sql.sources.partitionOverwriteMode=dynamic — dynamic " +
+          "overwrites are scoped by that conf")
     mode = "dynamic"; this
   }
 
@@ -60,17 +71,44 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     import org.apache.spark.sql.sources.{AlwaysTrue, EqualNullSafe, EqualTo}
     if (filters.forall(_.isInstanceOf[AlwaysTrue])) return truncate()
     // Spark spells a static PARTITION (k=v) spec as EqualNullSafe
-    staticFilters = filters.toSeq.map {
+    val leafEq = filters.toSeq.collect {
       case EqualTo(a, v) if partCols.contains(a) => (a, v)
       case EqualNullSafe(a, v) if partCols.contains(a) => (a, v)
-      case other => throw new UnsupportedOperationException(
-        s"INSERT OVERWRITE on $path: overwrite filter $other is not a " +
-          "partition-column equality — a predicate-scoped overwrite " +
-          "belongs to the row-level DML tier (DELETE + INSERT, or MERGE)" +
-          "; the insert sink replaces whole tables or whole partitions")
     }
-    mode = "static"
+    if (leafEq.size == filters.length) {
+      staticFilters = leafEq; mode = "static"
+    } else {
+      whereFilters = filters.toSeq; mode = "where"
+    }
     this
+  }
+
+  /** A pushed overwrite filter back as a Column, for replaceWhere. */
+  private def toColumn(f: org.apache.spark.sql.sources.Filter)
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(a, v) => col(a) === lit(v)
+      case EqualNullSafe(a, v) => col(a) <=> lit(v)
+      case GreaterThan(a, v) => col(a) > lit(v)
+      case GreaterThanOrEqual(a, v) => col(a) >= lit(v)
+      case LessThan(a, v) => col(a) < lit(v)
+      case LessThanOrEqual(a, v) => col(a) <= lit(v)
+      case In(a, vs) => col(a).isin(vs.toSeq: _*)
+      case IsNull(a) => col(a).isNull
+      case IsNotNull(a) => col(a).isNotNull
+      case StringStartsWith(a, v) => col(a).startsWith(v)
+      case StringEndsWith(a, v) => col(a).endsWith(v)
+      case StringContains(a, v) => col(a).contains(v)
+      case And(l, r) => toColumn(l) && toColumn(r)
+      case Or(l, r) => toColumn(l) || toColumn(r)
+      case Not(c) => !toColumn(c)
+      case AlwaysTrue() => lit(true)
+      case AlwaysFalse() => lit(false)
+      case other => throw new UnsupportedOperationException(
+        s"overwrite on $path: filter $other has no replaceWhere spelling")
+    }
   }
 
   override def build(): Write = this
@@ -79,22 +117,40 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     s"graft $mode insert $path (${face.label})"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = {
-    val spark = SparkSession.active
-    new FeatherWriterFactory(writeSchema, path, "lz4", 4096,
-      GraftHadoop.confBroadcast(spark))
-  }
+      : DataWriterFactory =
+    // a predicate overwrite re-reads its rows for replaceWhere: tmp
+    // feather parts are that read's input
+    if (mode == "where")
+      FaceTaskWriters.featherFactory(SparkSession.active, writeSchema, path)
+    else FaceTaskWriters.factory(SparkSession.active, face, partCols,
+      writeSchema, path)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
+    val committed = FaceTaskWriters.parts(messages.toSeq)
     val (data, empty) = committed.partition(m =>
       FeatherStats.fromJson(m.statsJson).nonEmpty)
     empty.foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
+    }
+    if (mode == "where") {
+      // replaceWhere owns the whole commit (its own parts, conflict
+      // check and stamps); the tmp parts are only its input rows
+      try {
+        val rows =
+          if (data.isEmpty) spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            writeSchema)
+          else graft.io.GraftFeather.readFiles(spark, data.toSeq.map(m =>
+            (new org.apache.hadoop.fs.Path(path, m.tmpName).toString,
+              m.bytes)))
+        graft.io.PredicateMutations.replaceWhere(spark, path, rows,
+          whereFilters.map(toColumn).reduce(_ && _)): Unit
+      } finally abort(data.toArray[WriterCommitMessage])
+      return
     }
     val snap = FeatherSnapshots.resolve(fs, root, None).getOrElse(
       throw new IllegalStateException(
@@ -108,23 +164,27 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       case _ => "insert_overwrite"
     }
     val targetV = snap.version + 1
-    val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs,
+    val (parts, flatStats) = FaceTaskWriters.finalizeParts(opName, face, fs,
       path, data.toSeq, dataSchema, partCols, targetV)
+    lazy val relOfAbs = snap.files.map { case (rel, _) =>
+      new org.apache.hadoop.fs.Path(root, rel).toString -> rel }.toMap
     // which existing files does this statement replace?
     val removeRel: Set[String] = mode match {
       case "append" => Set.empty
       case "truncate" => snap.files.map(_._1).toSet
+      case "dynamic" if parts.isEmpty => Set.empty
       case "dynamic" =>
-        // Spark/Hive dynamic semantics: only the leaf dirs the new rows
-        // actually landed in are replaced
-        val touched = parts.map { case (rel, _) =>
-          val i = rel.lastIndexOf('/')
-          if (i < 0) "" else rel.substring(0, i)
-        }.toSet
-        snap.files.map(_._1).filter { rel =>
-          val i = rel.lastIndexOf('/')
-          touched(if (i < 0) "" else rel.substring(0, i))
-        }.toSet
+        // Spark/Hive dynamic semantics: only the leaves the new rows
+        // landed in are replaced, compared by TYPED value
+        val disc = FeatherSnapshots.toDiscovered(root, snap)
+        def typed(values: Seq[(String, String)]): Seq[Any] =
+          values.map { case (c, raw) =>
+            FeatherPartitions.castValue(raw, disc.partSchema(c).dataType) }
+        val landed = FeatherSnapshots.toDiscovered(root,
+          snap.copy(files = parts, dvs = Map.empty)).files
+          .map(l => typed(l.values)).toSet
+        disc.files.filter(l => landed(typed(l.values)))
+          .map(l => relOfAbs(l.file)).toSet
       case "static" =>
         // leaves whose partition VALUES equal every static filter value
         // (a partition column is constant per leaf, so equality decides
@@ -143,8 +203,6 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
             }
           }
         }
-        val relOfAbs = snap.files.map { case (rel, _) =>
-          new org.apache.hadoop.fs.Path(root, rel).toString -> rel }.toMap
         matching.map(l => relOfAbs(l.file)).toSet
     }
     // nothing written AND nothing replaced (dynamic overwrite of zero
@@ -169,14 +227,14 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
       throw e
     }
-    if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
+    FeatherMutations.upsertLeafStats(fs, root, flatStats)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
+    FaceTaskWriters.parts(messages.toSeq).foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }

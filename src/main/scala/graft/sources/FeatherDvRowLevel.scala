@@ -69,38 +69,20 @@ private[graft] class FeatherDeltaOperation(cmd: Command, path: String,
       batchSkip = true)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new FeatherDeltaWrite(this, info, path, fullSchema)
+    new FaceDeltaWrite(this, info, path, ConnectorFace.FeatherFace,
+      fullSchema, Nil)
 }
 
 /** One task's delta output: at most one insert part (tmp name + stats)
   * plus its deleted positions grouped by ABSOLUTE data-file path. */
 private case class FeatherDeltaCommitMessage(
-    insert: Option[FeatherCommitMessage],
+    insert: Option[WriterCommitMessage],
     deletes: Map[String, Array[Long]]) extends WriterCommitMessage
 
-/** The flat-feather delta write: the shared [[FaceDeltaWrite]] commit
-  * protocol with ZERO-COPY insert finalization — tmp feather parts
-  * RENAME to finals instead of paying the generic path's conversion
-  * pass (flat feather is the one face whose tmp and final formats
-  * coincide). */
-private class FeatherDeltaWrite(op: FeatherRowLevelHost,
-                                info: LogicalWriteInfo, path: String,
-                                tableSchema: StructType)
-    extends FaceDeltaWrite(op, info, path,
-      graft.io.ConnectorFace.FeatherFace, tableSchema, Nil) {
-  override protected def finalizeInserts(
-      fs: org.apache.hadoop.fs.FileSystem,
-      msgs: Seq[FeatherCommitMessage], opName: String, targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
-    val renamed = FeatherDsvWrites.renameParts(fs, path, msgs)
-    (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
-  }
-}
-
+/** `inserts` writes the insert half's part (the face's task writer). */
 private class FeatherDeltaWriterFactory(
-    rowSchema: StructType, rowIdSchema: StructType, path: String,
-    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    rowIdSchema: StructType,
+    inserts: org.apache.spark.sql.connector.write.DataWriterFactory)
     extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -118,9 +100,7 @@ private class FeatherDeltaWriterFactory(
         : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = null
     private def insertWriter = {
       if (insertPw == null)
-        insertPw = FeatherSourceWriters.dataWriter(rowSchema, path,
-          f".part-$partitionId%05d-task-$taskId.feather.tmp",
-          "lz4", 4096, partitionId, confMap)
+        insertPw = inserts.createWriter(partitionId, taskId)
       insertPw
     }
 
@@ -143,7 +123,7 @@ private class FeatherDeltaWriterFactory(
 
     override def commit(): WriterCommitMessage =
       FeatherDeltaCommitMessage(
-        Option(insertPw).map(_.commit().asInstanceOf[FeatherCommitMessage]),
+        Option(insertPw).map(_.commit()),
         deletes.view.mapValues(_.toArray).toMap)
 
     override def abort(): Unit = if (insertPw != null) insertPw.abort()

@@ -9,16 +9,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.{ConnectorFace, FeatherStats, GraftFeather, GraftHadoop}
 
-/** Group-based (copy-on-write) DSv2 row-level operations for feather
-  * snapshot tables — what lets a session configured with ONLY
-  * `spark.sql.catalog.graft` (no graft extensions) run DELETE / UPDATE /
-  * MERGE against `graft.<ns>.<table>` through Spark's OWN rewrite
-  * machinery (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
-  * `RewriteMergeIntoTable` → ReplaceData). In a graft session the
-  * extension resolution rules claim these statements first (the engine's
-  * pruned COW / merge-on-read DML paths, which also serve hive-partitioned
-  * tables and every face); this module is the third-party-session
-  * interop path.
+/** Group-based (copy-on-write) DSv2 row-level operations for flat
+  * feather snapshot tables — how DELETE / UPDATE / MERGE against
+  * `graft.<ns>.<table>` (or the path spelling) run through Spark's OWN
+  * rewrite machinery (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
+  * `RewriteMergeIntoTable` → ReplaceData) with split scans; other faces
+  * and hive layouts take the [[FaceRowLevel]] pair.
   *
   * THE GROUP CONTRACT (what makes copy-on-write correct here):
   *
@@ -88,7 +84,8 @@ private[graft] class FeatherRowLevelOperation(cmd: Command, path: String,
     new FeatherCowScanBuilder(this, path, fullSchema, maxSplitBytes)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new FeatherCowWrite(this, info.schema(), path)
+    new FaceCowWrite(this, info.schema(), path, ConnectorFace.FeatherFace,
+      info.schema(), Nil)
 }
 
 /** What the COW scan read: the snapshot it planned against and the
@@ -299,23 +296,6 @@ private class FeatherCowScan(op: FeatherRowLevelHost,
       GraftHadoop.confBroadcast(SparkSession.active), mergeSchema = true)
 }
 
-/** The flat-feather ReplaceData write: the shared [[FaceCowWrite]]
-  * commit protocol with ZERO-COPY insert finalization — tmp feather
-  * parts RENAME to finals (flat feather is the one face whose tmp and
-  * final formats coincide, so it never pays the generic conversion). */
-private class FeatherCowWrite(op: FeatherRowLevelHost, st: StructType,
-                              path: String)
-    extends FaceCowWrite(op, st, path, ConnectorFace.FeatherFace, st, Nil) {
-  override protected def finalizeInserts(
-      fs: org.apache.hadoop.fs.FileSystem,
-      msgs: Seq[FeatherCommitMessage], opName: String, targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
-    val renamed = FeatherDsvWrites.renameParts(fs, path, msgs)
-    (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
-  }
-}
-
 /** Shared plumbing of the engine's DSv2 writes that publish through a
   * MANIFEST commit (the row-level COW/delta writes, the staged
   * CREATE/REPLACE write): rename the tasks' tmp parts to gen-tagged
@@ -327,34 +307,55 @@ private class FeatherCowWrite(op: FeatherRowLevelHost, st: StructType,
   * (per-part sidecars cover readers in the window; merged is a planning
   * cache). */
 private[sources] object FeatherDsvWrites {
-  /** Rename tmp parts to final names + write per-part sidecars; returns
-    * final name → (bytes, batch stats), the upsertMerged input shape.
-    * ZERO-ROW parts (empty batch stats — a task every row bypassed) are
-    * deleted, not renamed: publishing them would add one junk file per
-    * idle task to the manifest. */
+  /** Rename tmp parts (written in the face `suffix` names) to final
+    * names in the tmp part's own directory (a routed part's tmp name
+    * carries its hive leaf) + write per-part sidecars; returns final
+    * relative name → (bytes, batch stats). */
   def renameParts(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                  committed: Seq[FeatherCommitMessage])
+                  committed: Seq[FeatherCommitMessage], suffix: String)
       : Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])] = {
     // the append sink's naming: the gen tag keeps these parts
     // collision-free beside retained generations
     val gen = f"-g${System.nanoTime()}%x"
-    committed.flatMap { m =>
-      val stats = FeatherStats.fromJson(m.statsJson)
-      val tmp = new org.apache.hadoop.fs.Path(path, m.tmpName)
-      if (stats.isEmpty) {
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-        None
-      } else {
-        val fin = new org.apache.hadoop.fs.Path(path,
+    landParts(fs, path, new org.apache.hadoop.fs.Path(path), committed,
+      (m, _) => {
+        val leaf = graft.io.FeatherMutations.relDirOf(m.tmpName)
+        (if (leaf.isEmpty) "" else s"$leaf/") +
           f"part-${m.partitionId}%05d-${java.util.UUID.nameUUIDFromBytes(
-            m.tmpName.getBytes("UTF-8"))}$gen.feather")
-        require(fs.rename(tmp, fin), s"commit rename $tmp -> $fin failed")
-        val sc = fs.create(new org.apache.hadoop.fs.Path(path,
-          fin.getName + ".stats.json"), true)
-        try sc.write(m.statsJson.getBytes("UTF-8")) finally sc.close()
-        Some(fin.getName -> (m.bytes, stats))
-      }
-    }.toMap
+            m.tmpName.getBytes("UTF-8"))}$gen$suffix"
+      })
+      .map { case (n, len, js) => n -> (len, FeatherStats.fromJson(js)) }
+      .toMap
+  }
+
+  /** Move tmp parts from `fromDir` into `to` under `nameOf`'s relative
+    * names and write their stats sidecars beside them; returns (name,
+    * bytes, stats json).
+    * ZERO-ROW parts (empty batch stats — a task every row bypassed) are
+    * deleted, not moved: publishing them would add one junk file per
+    * idle task to the manifest. */
+  def landParts(fs: org.apache.hadoop.fs.FileSystem, fromDir: String,
+                to: org.apache.hadoop.fs.Path,
+                committed: Seq[FeatherCommitMessage],
+                nameOf: (FeatherCommitMessage, Int) => String)
+      : Seq[(String, Long, String)] = {
+    val (data, empty) = committed.partition(m =>
+      FeatherStats.fromJson(m.statsJson).nonEmpty)
+    empty.foreach { m =>
+      try fs.delete(new org.apache.hadoop.fs.Path(fromDir, m.tmpName), false)
+      catch { case _: Exception => () }
+    }
+    data.zipWithIndex.map { case (m, i) =>
+      val tmp = new org.apache.hadoop.fs.Path(fromDir, m.tmpName)
+      val name = nameOf(m, i)
+      val fin = new org.apache.hadoop.fs.Path(to, name)
+      fs.mkdirs(fin.getParent)
+      require(fs.rename(tmp, fin), s"commit rename $tmp -> $fin failed")
+      val sc = fs.create(new org.apache.hadoop.fs.Path(to,
+        name + ".stats.json"), true)
+      try sc.write(m.statsJson.getBytes("UTF-8")) finally sc.close()
+      (name, m.bytes, m.statsJson)
+    }
   }
 
   /** Failure-path unwind: delete finalized parts and their sidecars — a

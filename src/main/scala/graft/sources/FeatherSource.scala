@@ -58,13 +58,17 @@ class FeatherDataSource extends TableProvider with DataSourceRegister
     val spark = SparkSession.active
     val disc = FeatherDiscovery.discover(spark, pathOf(options),
       pinnedVersion(options, pathOf(options)))
+    // one footer cannot vouch for the other files' nulls (a later
+    // generation may fill a column the first declared non-null): that
+    // inference is nullable throughout, the merged one is exact
+    val merge = Option(options.get("mergeschema")).exists(_.toBoolean)
     val fields =
-      if (Option(options.get("mergeschema")).exists(_.toBoolean))
+      if (merge)
         GraftFeather.readFieldsMerged(spark,
           disc.files.map(l => (l.file, l.len)))
       else GraftFeather.readFields(spark, disc.files.head.file)
     StructType(fields.map(f => org.apache.spark.sql.types.StructField(
-      f.getName, GraftFeather.toSparkType(f), f.isNullable)) ++
+      f.getName, GraftFeather.toSparkType(f), !merge || f.isNullable)) ++
       disc.partSchema.fields)
   }
 
@@ -761,11 +765,21 @@ private class FeatherWrite(st: StructType, path: String, truncate: Boolean,
     val spark = SparkSession.active
     val out = new org.apache.hadoop.fs.Path(path)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
+    val all = messages.collect { case m: FeatherCommitMessage => m }
     // snapshot mode: requested on this write, or the table already carries
     // a _snapshots directory (once snapshotted, every commit must publish
     // a manifest or manifest-planned reads would miss it)
     val snapMode = snapshotsOpt || FeatherSnapshots.enabled(fs, out)
+    // an APPEND to a snapshot table drops its zero-row tmps, and one with
+    // no rows at all publishes no version (replay-clean, like every other
+    // insert path); overwrites keep them — emptying is their meaning
+    val tableAppend = !truncate && FeatherSnapshots.enabled(fs, out)
+    val (committed, zeroRow) =
+      if (!tableAppend) (all, Array.empty[FeatherCommitMessage])
+      else all.partition(m =>
+        graft.io.FeatherStats.fromJson(m.statsJson).nonEmpty)
+    abort(zeroRow.toArray[org.apache.spark.sql.connector.write.WriterCommitMessage])
+    if (tableAppend && committed.isEmpty) return
     // refuse a root-level append into a hive layout BEFORE renaming any
     // part — failing after the renames would leave orphan residue at the
     // root that a later adopt() would mix into an unreadable manifest
@@ -945,7 +959,9 @@ private class FeatherStreamingWriterFactory(
 private class FeatherWriterFactory(
     st: StructType, path: String, codec: String, batchSize: Int,
     confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
+    extends DirWriterFactory {
+  override def inDir(dir: String): DirWriterFactory =
+    new FeatherWriterFactory(st, dir, codec, batchSize, confMap)
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     FeatherSourceWriters.dataWriter(st, path,

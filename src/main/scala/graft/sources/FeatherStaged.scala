@@ -7,34 +7,31 @@ import org.apache.spark.sql.types.StructType
 
 import graft.io.{GraftFeather, TableDdl}
 
-/** The STAGED table behind `StagingTableCatalog` — what gives a
-  * catalog-only session atomic `CREATE OR REPLACE TABLE [AS SELECT]`,
-  * `REPLACE TABLE`, and atomic CTAS by name, on EVERY face, partitioned
-  * layouts included (rows route to their key=value leaves through the
-  * engine's shared insert routing; a partitioned REPLACE swaps the old
-  * files for the new leaves in the one commit).
+/** The STAGED table behind `StagingTableCatalog` — atomic `CREATE OR
+  * REPLACE TABLE [AS SELECT]`, `REPLACE TABLE`, and atomic CTAS by name
+  * or path, on EVERY face, partitioned layouts included (rows route to
+  * their key=value leaves; a partitioned REPLACE swaps the old files for
+  * the new leaves in the one commit).
   *
   * Protocol: Spark stages the table, writes the query through
-  * [[newWriteBuilder]] (tasks land hidden TMP FEATHER parts — the
-  * engine's universal task-side row writer — visible to nobody), then
-  * calls [[commitStagedChanges]], which reads the tmp parts back as one
-  * frame and hands the publish to the ENGINE's own DDL lowering —
-  * [[TableDdl.createTableAs]] / [[TableDdl.createTable]] /
-  * [[TableDdl.replaceTable]] — so a catalog-only statement gets exactly
-  * the graft session's semantics: face-dispatched final parts (USING
-  * feather/parquet/avro), partitioned leaf routing on every face,
-  * schema stamps for empty results, prior versions time-travelable with
-  * RESTORE undoing a replace, and the strictest conflict contract in the
-  * tier (replace commits with the FULL read set + requireNoNewFiles —
-  * ANY concurrent commit aborts; a racing CREATE loses at the
-  * manifest's exactly-once v1 / the fresh-directory check).
+  * [[newWriteBuilder]] — the tasks land hidden parts in a sibling
+  * staging directory, visible to nobody, through [[FaceTaskWriters]]:
+  * a feather or parquet table gets its FINAL parts there in one pass
+  * (routed to their hive leaves on a partitioned layout), avro gets tmp
+  * feather parts — then calls [[commitStagedChanges]], which hands the
+  * publish to the engine's DDL
+  * — [[TableDdl.createTableAs]] / [[TableDdl.createTable]] /
+  * [[TableDdl.replaceTable]]: task-written final parts are MOVED into
+  * the table under the commit's prefix, tmp feather parts are read back
+  * as the statement's query. Either way the statement gets the DDL's
+  * semantics: schema stamps for empty results, prior versions
+  * time-travelable with RESTORE undoing a replace, and the strictest
+  * conflict contract in the tier (replace commits with the FULL read set
+  * + requireNoNewFiles — ANY concurrent commit aborts; a racing CREATE
+  * loses at the manifest's exactly-once v1 / the fresh-directory check).
   *
-  * Cost honesty: the staged rows are written twice (tmp feather, then
-  * the face parts) — bytes ∝ the statement's own output, one extra
-  * conversion pass per STATEMENT.
-  *
-  * [[abortStagedChanges]] (and any publish failure) deletes the tmp
-  * parts — un-manifested files were never visible to readers. */
+  * [[abortStagedChanges]] (and any publish failure) deletes the staging
+  * directory — un-manifested files were never visible to readers. */
 private[graft] class FeatherStagedTable(path: String, identName: String,
                                         tableSchema: StructType,
                                         partCols: Seq[String],
@@ -66,8 +63,10 @@ private[graft] class FeatherStagedTable(path: String, identName: String,
     java.util.EnumSet.of(TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE)
 
+  private lazy val face = TableDdl.faceOf(provider, identName)
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new FeatherStagedWrite(info.schema(), stagingDir, staged)
+    new FeatherStagedWrite(info.schema(), stagingDir, staged, face, partCols)
 
   override def commitStagedChanges(): Unit = {
     val spark = SparkSession.active
@@ -80,10 +79,20 @@ private[graft] class FeatherStagedTable(path: String, identName: String,
       // CTAS whose query planned zero tasks)
       val dataTmps = msgs.filter(m =>
         graft.io.FeatherStats.fromJson(m.statsJson).nonEmpty)
-      val query = if (dataTmps.isEmpty) None else Some(
-        GraftFeather.readFiles(spark, dataTmps.map(m =>
-          (new org.apache.hadoop.fs.Path(stagingDir, m.tmpName).toString,
-            m.bytes))))
+      val query: Option[TableDdl.Rows] =
+        if (dataTmps.isEmpty) None
+        else if (FaceTaskWriters.native(face))
+          Some(TableDdl.LandedRows(tableSchema, (fs, root, prefix) =>
+            FeatherDsvWrites.landParts(fs, stagingDir, root, dataTmps,
+              (m, i) => {
+                // a routed part keeps its hive leaf
+                val leaf = graft.io.FeatherMutations.relDirOf(m.tmpName)
+                (if (leaf.isEmpty) "" else s"$leaf/") +
+                  f"$prefix-$i%05d${face.suffix}"
+              })))
+        else Some(TableDdl.QueryRows(GraftFeather.readFiles(spark,
+          dataTmps.map(m => (new org.apache.hadoop.fs.Path(stagingDir,
+            m.tmpName).toString, m.bytes)))))
       if (replaceExisting)
         // replaceTable handles the table-vanished-since-staging race
         // itself: orCreate falls back to CREATE, plain REPLACE refuses
@@ -112,19 +121,16 @@ private[graft] class FeatherStagedTable(path: String, identName: String,
   }
 }
 
-/** The staged table's DSv2 write: the engine's universal tmp-feather
-  * task writers; `commit` only STASHES the tmp messages on the staged
-  * table — every rename/conversion/publish belongs to
-  * commitStagedChanges' single engine-DDL call. */
+/** The staged table's DSv2 write: the face's task writers; `commit`
+  * only STASHES the part messages on the staged table — every
+  * move/conversion/publish belongs to commitStagedChanges' single
+  * engine-DDL call. */
 private class FeatherStagedWrite(
     st: StructType, path: String,
-    staged: scala.collection.mutable.ArrayBuffer[FeatherCommitMessage])
+    staged: scala.collection.mutable.ArrayBuffer[FeatherCommitMessage],
+    face: graft.io.ConnectorFace, partCols: Seq[String])
     extends WriteBuilder with Write with BatchWrite
     with org.apache.spark.sql.connector.write.SupportsTruncate {
-  // fail on unmappable schemas BEFORE tasks launch (the tmp parts must
-  // round-trip every column)
-  st.fields.foreach(f =>
-    graft.io.GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
 
   // a staged replace IS a truncate-and-write; the staged commit already
   // publishes replace semantics, so the mode flag changes nothing
@@ -142,12 +148,11 @@ private class FeatherStagedWrite(
     // retry-idempotence: a re-run batch write (new factory) must not
     // double-publish a previous attempt's parts
     staged.synchronized { staged.clear() }
-    new FeatherWriterFactory(st, path, "lz4", 4096,
-      graft.io.GraftHadoop.confBroadcast(spark))
+    FaceTaskWriters.factory(spark, face, partCols, st, path)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
+    val committed = FaceTaskWriters.parts(messages.toSeq)
     staged.synchronized { staged ++= committed }
     ()
   }
@@ -156,7 +161,7 @@ private class FeatherStagedWrite(
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
+    FaceTaskWriters.parts(messages.toSeq).foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }

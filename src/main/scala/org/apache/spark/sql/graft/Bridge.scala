@@ -216,4 +216,11 @@ object Bridge {
         outputTimestampType = org.apache.spark.sql.internal.SQLConf
           .ParquetOutputTimestampType.TIMESTAMP_MICROS)
       .convert(schema)
+
+  /** Every field (nested ones included) nullable — the file-source
+    * convention (`DataType.asNullable` is private[spark]). */
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
+  def asNullable(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = dt.asNullable
 }

@@ -57,4 +57,29 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("did not converge"))
   }
+
+  test("a failed job releases the edges cache and the live round's " +
+       "blocks: persisted RDDs return to their pre-call count") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // the edge relation fails while round 1 materializes it
+    val poisoned = (0L until 50L).map(i => (i, i + 1)).toDF("d1", "d2")
+      .withColumn("d2", when(col("d1") === 25L,
+        raise_error(lit("boom"))).otherwise(col("d2")))
+    val e = intercept[Exception] {
+      ConnectedComponents.minLabel(poisoned, localContract = false)
+    }
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    assert(sc.getPersistentRDDs.size === before,
+      "a failed job must not leak the edges cache or a round's blocks")
+    // the round-cap refusal exits mid-loop with a live round: same rule
+    val chain = (0L until 499L).map(i => (i, i + 1)).toDF("d1", "d2")
+    intercept[IllegalStateException] {
+      ConnectedComponents.minLabel(chain, maxIters = 2,
+        localContract = false)
+    }
+    assert(sc.getPersistentRDDs.size === before)
+  }
 }

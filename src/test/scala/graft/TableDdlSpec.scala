@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.FeatherSnapshots
 
-/** SQL DDL over graft tables (io/TableDdl via GraftSqlRelationsRule):
+/** SQL DDL over graft tables (GraftCatalog onto io/TableDdl):
   * TRUNCATE TABLE and ALTER TABLE ADD COLUMNS — both manifest-only
-  * statements (per-leaf zero-row stamps, no data reads or rewrites). */
+  * statements (per-leaf zero-row stamps, no data reads or rewrites) —
+  * plus CREATE/REPLACE, DESCRIBE, SHOW PARTITIONS and MSCK REPAIR. */
 class TableDdlSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -116,7 +117,7 @@ class TableDdlSpec extends AnyFunSuite {
     refuse(s"ALTER TABLE graft.`$path` ADD COLUMNS (AMT DOUBLE)",
       "already exists")
     refuse(s"ALTER TABLE graft.`$path` ADD COLUMNS (x INT, X LONG)",
-      "more than once")
+      "COLUMN_ALREADY_EXISTS")
     refuse(s"ALTER TABLE graft.`$path` ADD COLUMNS (x INT NOT NULL)",
       "NOT NULL")
     refuse(s"ALTER TABLE graft.`$path` ADD COLUMNS (x INT FIRST)",
@@ -483,7 +484,7 @@ class TableDdlSpec extends AnyFunSuite {
       spark.sql(s"ALTER TABLE graft.`$part` ADD COLUMNS (day STRING)")
         .collect()
     }
-    assert(e.getMessage.contains("partition column"), e.getMessage)
+    assert(e.getMessage.contains("`day` already exists"), e.getMessage)
     spark.sql(s"ALTER TABLE graft.`$part` ADD COLUMNS (score DOUBLE)")
       .collect(): Unit
     val got = graft.io.ParquetTable.read(spark, part)
