@@ -642,7 +642,12 @@ object ScaleRehearsal {
         afterDel + (0L until 600000L).map(_ * 16).count(!live(_))
       }
       require(count == expect, s"row count $count != model $expect")
-      println(f"""{"facedml_rows":$n,"leaves":8,"files":${dataFiles(s0).size},"pruned_delete_sec":$delSec%.2f,"rewritten_files":${removed.size},"dv_delete_sec":$dvSec%.2f,"dv_bytes":$dvBytes,"merge_sec":$mrgSec%.2f,"final_rows":$count}""")
+      // parts the routed writes landed (the rewritten day=3 leaf; the
+      // merge's rewritten and new leaves)
+      def addedParts(a: graft.sources.FeatherSnapshots.Snapshot,
+                     b: graft.sources.FeatherSnapshots.Snapshot) =
+        (dataFiles(b).map(_._1).toSet -- dataFiles(a).map(_._1)).size
+      println(f"""{"facedml_rows":$n,"leaves":8,"files":${dataFiles(s0).size},"pruned_delete_sec":$delSec%.2f,"rewritten_files":${removed.size},"delete_parts_added":${addedParts(s0, s1)},"dv_delete_sec":$dvSec%.2f,"dv_bytes":$dvBytes,"merge_sec":$mrgSec%.2f,"merge_parts_added":${addedParts(s2, s3)},"final_rows":$count}""")
     } finally {
       prior.foreach(SparkSession.setActiveSession)
     }

@@ -57,50 +57,6 @@ class JaccardThresholdPruning extends Rule[LogicalPlan] {
   }
 }
 
-/** The lossless-or-exact insert rule for graft tables, as a check on
-  * Spark's analyzed INSERT: the ANSI store assignment would silently
-  * narrow (15.5 into a BIGINT column writes 15), while a graft table
-  * takes only exact types and lossless up-casts — the rule of the
-  * engine's own insert API ([[graft.io.TableInserts]]). Inspects only
-  * the casts Spark's output resolver put on the query (tagged
-  * BY_TABLE_INSERTION — a user's explicit CAST is the intended
-  * narrowing); a cast of a string literal (a static PARTITION value) is
-  * exempt. */
-private[extensions] object LosslessGraftInserts extends (LogicalPlan => Unit) {
-  import org.apache.spark.sql.catalyst.plans.logical.{AppendData, OverwriteByExpression, OverwritePartitionsDynamic, Project, V2WriteCommand}
-  import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-
-  override def apply(plan: LogicalPlan): Unit = plan.foreach {
-    case w @ (_: AppendData | _: OverwriteByExpression |
-        _: OverwritePartitionsDynamic) =>
-      val cmd = w.asInstanceOf[V2WriteCommand]
-      (cmd.table, cmd.query) match {
-        case (r: DataSourceV2Relation, Project(list, _))
-            if r.table.isInstanceOf[graft.catalog.GraftTable] =>
-          list.foreach(e => castOf(e).foreach { c =>
-            if (!Cast.canUpCast(c.child.dataType, c.dataType))
-              throw new IllegalArgumentException(
-                s"INSERT into ${r.table.name()}: column '${e.name}' " +
-                  s"(${c.dataType.catalogString}) from a " +
-                  s"${c.child.dataType.catalogString} expression — only " +
-                  "exact types and lossless upcasts are applied; cast the " +
-                  "query column explicitly if the narrowing is intended")
-          })
-        case _ => ()
-      }
-    case _ => ()
-  }
-
-  private def castOf(e: Expression): Option[Cast] = e match {
-    case Cast(Literal(_, org.apache.spark.sql.types.StringType), _, _, _) =>
-      None
-    case c: Cast if c.getTagValue(Cast.BY_TABLE_INSERTION).isDefined =>
-      Some(c)
-    case u: UnaryExpression => castOf(u.child)
-    case _ => None
-  }
-}
-
 /** Session extension entry point:
   * `.config("spark.sql.extensions", "graft.extensions.GraftExtensions")`.
   *
@@ -110,8 +66,9 @@ private[extensions] object LosslessGraftInserts extends (LogicalPlan => Unit) {
   * libcudf C++ callable) the reference exposes per operator. Table SQL
   * (reads, INSERT, MERGE/UPDATE/DELETE, DDL) is NOT handled here: it
   * runs through [[graft.catalog.GraftCatalog]] and Spark's own v2
-  * analysis; this extension only adds the maintenance table functions
-  * and the exec planning for the few v2 commands Spark leaves unplanned.
+  * analysis; this extension only adds the maintenance table functions,
+  * the exec planning for the few v2 commands Spark leaves unplanned and
+  * the checks of [[GraftStatementChecks]] and [[LosslessGraftWrites]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -128,7 +85,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new JaccardThresholdPruning)
-    ext.injectCheckRule(_ => LosslessGraftInserts)
+    // graft wording for the table statements Spark's v2 analysis
+    // serves, and the lossless-or-exact rule on its write casts
+    ext.injectResolutionRule(_ => GraftStatementChecks)
+    ext.injectCheckRule(_ => LosslessGraftWrites)
 
     // the table-maintenance tier's SQL face (CALL-style table functions:
     // OPTIMIZE / ZORDER / VACUUM / RESTORE / expire / history / CDF)

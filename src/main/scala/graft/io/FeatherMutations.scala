@@ -819,22 +819,9 @@ object FeatherMutations {
     // reused as-is; unpersisting it here would evict the caller's cache.
     val (src, owned) = ConnectorFace.pinIfUncached(src0)
     try {
-      // Spark's Hive escaping — the SAME encoding the partitioned sink
-      // writes (ParquetTable) and every reader unescapes; URLEncoder's
-      // space→'+' would land key=a+b and read back the literal "a+b"
-      def enc(v: String) = graft.sources.FeatherPartitions.escapePath(v)
       def leafOf(row: org.apache.spark.sql.Row): String =
-        partCols.zipWithIndex.map { case (c, i) =>
-          val v = row.get(i)
-          if (v != null &&
-              v.toString == graft.sources.FeatherPartitions.HiveNull)
-            throw new IllegalArgumentException(
-              s"$op: partition value for '$c' is the literal hive null " +
-                s"marker '${v.toString}' — it would be unreadable as " +
-                "anything but NULL; use an actual null")
-          s"${enc(c)}=${if (v == null)
-            graft.sources.FeatherPartitions.HiveNull else enc(v.toString)}"
-        }.mkString("/")
+        graft.sources.FeatherPartitions.leafName(op, partCols,
+          partCols.indices.map(row.get))
       // deterministic leaf order keeps tuple → sub-prefix assignment
       // stable within the run; a crashed attempt's residue (run-unique
       // prefix) is vacuumOrphans work

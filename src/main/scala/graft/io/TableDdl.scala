@@ -238,6 +238,10 @@ object TableDdl {
     Result(v1.version, 0, 0, v1.files.size)
   }
 
+  val MissingReplaceTarget: String =
+    "no snapshot table at this path — REPLACE TABLE requires one " +
+      "(CREATE OR REPLACE TABLE creates it)"
+
   /** `[CREATE OR] REPLACE TABLE graft.`/t` [USING face] [AS SELECT ...]`
     * — ONE manifest commit swaps the whole table: files, schema, even
     * the face. Prior versions keep reading their own files, so time
@@ -277,8 +281,7 @@ object TableDdl {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!FeatherSnapshots.enabled(fs, root)) {
       if (!orCreate)
-        bad("no snapshot table at this path — REPLACE TABLE requires " +
-          "one (CREATE OR REPLACE TABLE creates it)")
+        bad(MissingReplaceTarget)
       return schemaOrQuery match {
         case Right(q) =>
           createTableAs(spark, path, q, provider, partitionCols,
@@ -447,29 +450,41 @@ object TableDdl {
     * and default-free; a name colliding with an existing column OR its
     * case-variant refuses outright (the WriteSchemaEvolution rule — a
     * silently-landed case conflict bricks every merged read). */
+  /** ADD COLUMNS name refusals — a name added twice, or colliding
+    * with an existing column (a partition column included) — compared
+    * case-insensitively REGARDLESS of spark.sql.caseSensitive: the
+    * footers outlive the session conf, and an insensitive reader of a
+    * sensitive writer's 'amt'+'AMT' table has no sound merge. Shared by
+    * [[addColumns]] and the SQL analysis check
+    * ([[graft.extensions.GraftStatementChecks]]), which must refuse
+    * before Spark's own analysis words it generically. */
+  def checkAddedNames(names: Seq[String], existing: Seq[String],
+                      partCols: Seq[String], bad: String => Nothing): Unit = {
+    names.groupBy(_.toLowerCase(java.util.Locale.ROOT)).foreach {
+      case (_, vs) if vs.size > 1 =>
+        bad(s"column '${vs.head}' is added more than once")
+      case _ => ()
+    }
+    names.foreach { n =>
+      existing.find(_.equalsIgnoreCase(n)).foreach(e =>
+        bad(s"column '$n' already exists as '$e'" +
+          (if (partCols.contains(e)) " (a partition column)" else "")))
+    }
+  }
+
   def addColumns(spark: SparkSession, path: String,
                  cols: Seq[StructField]): Result = {
     val op = "ALTER TABLE ADD COLUMNS"
     def bad(msg: String): Nothing =
       throw new IllegalArgumentException(s"$op on graft.`$path`: $msg")
     if (cols.isEmpty) bad("no columns to add")
-    cols.groupBy(_.name.toLowerCase(java.util.Locale.ROOT)).foreach {
-      case (_, vs) if vs.size > 1 =>
-        bad(s"column '${vs.head.name}' is added more than once")
-      case _ => ()
-    }
     def attempt(): Result = {
       val r = FeatherMutations.resolveTable(spark, path, op,
         requireHive = false,
         snapshotsHint = TableInserts.InsertSnapshotsHint)
-      // case-variants refuse REGARDLESS of spark.sql.caseSensitive: the
-      // footers outlive the session conf, and an insensitive reader of a
-      // sensitive writer's 'amt'+'AMT' table has no sound merge
-      val existing = r.fullSchema.fieldNames.toSeq
+      checkAddedNames(cols.map(_.name), r.fullSchema.fieldNames.toSeq,
+        r.partCols, bad)
       cols.foreach { f =>
-        existing.find(_.equalsIgnoreCase(f.name)).foreach(e =>
-          bad(s"column '${f.name}' already exists as '$e'" +
-            (if (r.partCols.contains(e)) " (a partition column)" else "")))
         if (!f.nullable)
           bad(s"column '${f.name}' is NOT NULL — existing rows have no " +
             "value for it; add it nullable (backfill with UPDATE, then " +

@@ -61,23 +61,18 @@ object TableInserts {
     FeatherMutations.resolveTable(spark, path, "tableFullSchema",
       requireHive = false, snapshotsHint = InsertSnapshotsHint).fullSchema
 
-  def insert(spark: SparkSession, path: String, query: DataFrame,
-             overwrite: Boolean,
-             partitionSpec: Map[String, Option[String]] = Map.empty,
-             userCols: Seq[String] = Nil, byName: Boolean = false,
-             codec: String = "lz4", tag: String = "ins-"): Result = {
-    val op = if (overwrite) "INSERT OVERWRITE" else "INSERT INTO"
-    def bad(msg: String): Nothing =
-      throw new IllegalArgumentException(s"$op graft.`$path`: $msg")
-    val r = FeatherMutations.resolveTable(spark, path, op,
-      requireHive = true, snapshotsHint = InsertSnapshotsHint)
-    val FeatherMutations.Resolved(root, fs, snap, face, partCols,
-      absFiles, tableSchema, partSchema, fullSchema, caseSensitive,
-      _) = r
-    val partitioned = r.partitioned
+  /** The statement's shape against the table: PARTITION spec names,
+    * the column list / BY NAME / positional width, extra columns (no
+    * schema evolution), unsupplied partition columns. Returns the static
+    * partition values and (table column → query column index), or
+    * `bad`'s refusal — ONE wording for [[insert]] and the SQL analysis
+    * check ([[graft.extensions.GraftStatementChecks]]). */
+  def align(fullSchema: StructType, partCols: Seq[String],
+            partitionSpec: Map[String, Option[String]],
+            queryCols: Seq[String], userCols: Seq[String], byName: Boolean,
+            caseSensitive: Boolean, bad: String => Nothing)
+      : (Map[String, String], Map[String, Int]) = {
     val canon = FeatherMutations.canonicalName(fullSchema, caseSensitive) _
-
-    // ---- PARTITION spec -----------------------------------------------------
     // static entries (k=v) pin the column for every row; dynamic entries
     // (bare k) only DECLARE that the column arrives from the query — our
     // positional convention already expects it there, so they validate
@@ -93,6 +88,74 @@ object TableInserts {
     }
     val static: Map[String, String] = specNamed.collect {
       case (k, Some(v)) => k -> v }.toMap
+    // expected input = the table's columns minus the statically-pinned
+    // partition columns, in table order (data first, partitions last)
+    val expected: Seq[String] =
+      fullSchema.fieldNames.toSeq.filterNot(static.contains)
+    def evolutionRefusal(names: Seq[String]): Nothing =
+      bad(s"the query supplies column(s) ${names.mkString(", ")} not in " +
+        s"the table schema (${fullSchema.fieldNames.mkString(", ")}) — " +
+        "a SQL INSERT has no mergeSchema opt-in and never evolves the " +
+        "schema; evolve via the write API's mergeSchema=true or MERGE " +
+        "WITH SCHEMA EVOLUTION, or drop the column")
+    val provided: Map[String, Int] =
+      if (userCols.nonEmpty) {
+        if (userCols.size != queryCols.size)
+          bad(s"the column list names ${userCols.size} column(s) but the " +
+            s"query produces ${queryCols.size}")
+        val named = userCols.map(canon)
+        named.groupBy(identity).foreach { case (n, vs) =>
+          if (vs.size > 1) bad(s"the column list names '$n' more than once") }
+        named.find(static.contains).foreach(n =>
+          bad(s"the column list names '$n', already pinned by the " +
+            "PARTITION spec"))
+        val unknown = named.filterNot(expected.contains)
+        if (unknown.nonEmpty) evolutionRefusal(unknown)
+        named.zipWithIndex.toMap
+      } else if (byName) {
+        val named = queryCols.map(canon)
+        named.groupBy(identity).foreach { case (n, vs) =>
+          if (vs.size > 1) bad(s"BY NAME: the query produces '$n' more " +
+            "than once") }
+        named.find(static.contains).foreach(n =>
+          bad(s"BY NAME: the query supplies '$n', already pinned by " +
+            "the PARTITION spec"))
+        val unknown = named.filterNot(expected.contains)
+        if (unknown.nonEmpty) evolutionRefusal(unknown)
+        named.zipWithIndex.toMap
+      } else {
+        if (queryCols.size != expected.size)
+          bad(s"the query produces ${queryCols.size} column(s) but the " +
+            s"table expects ${expected.size} (${expected.mkString(", ")})" +
+            " — positional INSERT supplies every column in table order; " +
+            "use INSERT INTO t (cols...) or BY NAME for a subset" +
+            (if (queryCols.size > expected.size) "; a SQL INSERT never " +
+              "evolves the schema (no mergeSchema opt-in)" else ""))
+        expected.zipWithIndex.toMap
+      }
+    partCols.find(c => !static.contains(c) && !provided.contains(c))
+      .foreach(c => bad(s"partition column '$c' is supplied by neither " +
+        "the query nor the PARTITION spec — an unnamed partition value " +
+        "would route rows to the null partition"))
+    (static, provided)
+  }
+
+  def insert(spark: SparkSession, path: String, query: DataFrame,
+             overwrite: Boolean,
+             partitionSpec: Map[String, Option[String]] = Map.empty,
+             userCols: Seq[String] = Nil, byName: Boolean = false,
+             codec: String = "lz4", tag: String = "ins-"): Result = {
+    val op = if (overwrite) "INSERT OVERWRITE" else "INSERT INTO"
+    def bad(msg: String): Nothing =
+      throw new IllegalArgumentException(s"$op graft.`$path`: $msg")
+    val r = FeatherMutations.resolveTable(spark, path, op,
+      requireHive = true, snapshotsHint = InsertSnapshotsHint)
+    val FeatherMutations.Resolved(root, fs, snap, face, partCols,
+      absFiles, tableSchema, partSchema, fullSchema, caseSensitive,
+      _) = r
+    val partitioned = r.partitioned
+    val (static, providedIdx) = align(fullSchema, partCols, partitionSpec,
+      query.columns.toSeq, userCols, byName, caseSensitive, bad)
     // the static value must PARSE as the column's inferred type — a
     // null-casting spelling would silently route every row to the null
     // leaf
@@ -102,65 +165,14 @@ object TableInserts {
         bad(s"PARTITION spec value $k='$v' does not parse as the " +
           s"column's ${fullSchema(k).dataType.catalogString}")
     }
-
-    // ---- column alignment ---------------------------------------------------
-    // expected input = the table's columns minus the statically-pinned
-    // partition columns, in table order (data first, partitions last)
-    val expected: Seq[StructField] =
-      fullSchema.fields.toSeq.filterNot(f => static.contains(f.name))
     // positional placeholder names decouple alignment from the query's
     // own (possibly duplicate) output names — `SELECT a, a` is legal in
     // the positional and column-list modes
     val posNames = query.columns.indices.map(i => s"__ins_c$i")
     val q2 = query.toDF(posNames: _*)
-    val qOut: Seq[(String, Column, DataType)] =
-      query.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        (f.name, q2(posNames(i)), f.dataType) }
-    def evolutionRefusal(names: Seq[String]): Nothing =
-      bad(s"the query supplies column(s) ${names.mkString(", ")} not in " +
-        s"the table schema (${fullSchema.fieldNames.mkString(", ")}) — " +
-        "a SQL INSERT has no mergeSchema opt-in and never evolves the " +
-        "schema; evolve via the write API's mergeSchema=true or MERGE " +
-        "WITH SCHEMA EVOLUTION, or drop the column")
     // provided: expected-column name -> (source column, its type)
-    val provided: Map[String, (Column, DataType)] =
-      if (userCols.nonEmpty) {
-        if (userCols.size != qOut.size)
-          bad(s"the column list names ${userCols.size} column(s) but the " +
-            s"query produces ${qOut.size}")
-        val named = userCols.map(canon)
-        named.groupBy(identity).foreach { case (n, vs) =>
-          if (vs.size > 1) bad(s"the column list names '$n' more than once") }
-        named.find(static.contains).foreach(n =>
-          bad(s"the column list names '$n', already pinned by the " +
-            "PARTITION spec"))
-        val unknown = named.filterNot(n => expected.exists(_.name == n))
-        if (unknown.nonEmpty) evolutionRefusal(unknown)
-        named.zip(qOut).map { case (n, (_, c, dt)) => n -> (c, dt) }.toMap
-      } else if (byName) {
-        val named = qOut.map { case (n, c, dt) => (canon(n), c, dt) }
-        named.groupBy(_._1).foreach { case (n, vs) =>
-          if (vs.size > 1) bad(s"BY NAME: the query produces '$n' more " +
-            "than once") }
-        named.find(t => static.contains(t._1)).foreach(t =>
-          bad(s"BY NAME: the query supplies '${t._1}', already pinned by " +
-            "the PARTITION spec"))
-        val unknown = named.map(_._1)
-          .filterNot(n => expected.exists(_.name == n))
-        if (unknown.nonEmpty) evolutionRefusal(unknown)
-        named.map { case (n, c, dt) => n -> (c, dt) }.toMap
-      } else {
-        if (qOut.size != expected.size)
-          bad(s"the query produces ${qOut.size} column(s) but the table " +
-            s"expects ${expected.size} (${expected.map(_.name)
-              .mkString(", ")}) — positional INSERT supplies every " +
-            "column in table order; use INSERT INTO t (cols...) or BY " +
-            "NAME for a subset" +
-            (if (qOut.size > expected.size) "; a SQL INSERT never " +
-              "evolves the schema (no mergeSchema opt-in)" else ""))
-        expected.map(_.name).zip(qOut).map { case (n, (_, c, dt)) =>
-          n -> (c, dt) }.toMap
-      }
+    val provided: Map[String, (Column, DataType)] = providedIdx.map {
+      case (n, i) => n -> (q2(posNames(i)), query.schema(i).dataType) }
     // lossless-or-exact per column (the mutation tier's rule); columns
     // the statement does not supply read as NULL in the new rows
     // every output column carries the TABLE's nullability (a literal's
@@ -179,12 +191,7 @@ object TableInserts {
                 "types and lossless upcasts are applied; cast the query " +
                 "column explicitly if the narrowing is intended")
             c.cast(f.dataType)
-          case None =>
-            if (partCols.contains(f.name))
-              bad(s"partition column '${f.name}' is supplied by neither " +
-                "the query nor the PARTITION spec — an unnamed partition " +
-                "value would route rows to the null partition")
-            lit(null).cast(f.dataType)
+          case None => lit(null).cast(f.dataType)
         }
       }
       FeatherMutations.nullableAsTable(raw, f.nullable).as(f.name)

@@ -147,10 +147,6 @@ private class AvroWriteBuilder(
       Option(info.options.get("mergeschema")).exists(_.toBoolean))
 }
 
-private case class AvroCommitMessage(tmpName: String, partitionId: Int,
-                                     statsJson: String, bytes: Long)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
 private class AvroWrite(st: StructType, path: String, truncate: Boolean,
                         codec: String, snapshotsOpt: Boolean = false,
                         mergeSchemaOpt: Boolean = false)
@@ -187,7 +183,7 @@ private class AvroWrite(st: StructType, path: String, truncate: Boolean,
     val spark = SparkSession.active
     val out = new org.apache.hadoop.fs.Path(path)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = messages.collect { case m: AvroCommitMessage => m }
+    val committed = messages.collect { case m: FeatherCommitMessage => m }
     // snapshot mode mirrors the feather face: requested on this write or
     // already snapshotted (then every commit must publish a manifest)
     val snapMode = snapshotsOpt || FeatherSnapshots.enabled(fs, out)
@@ -238,7 +234,7 @@ private class AvroWrite(st: StructType, path: String, truncate: Boolean,
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: AvroCommitMessage => m }.foreach { m =>
+    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
@@ -283,7 +279,7 @@ private class AvroStreamingWrite(st: StructType, schemaJson: String,
     if (FeatherSnapshots.enabled(fs, new org.apache.hadoop.fs.Path(path)))
       FeatherSnapshots.requireRootAppendable(fs,
         new org.apache.hadoop.fs.Path(path), Seq(".avro"))
-    val mergedAdd = messages.collect { case m: AvroCommitMessage => m }
+    val mergedAdd = messages.collect { case m: FeatherCommitMessage => m }
       .flatMap { m =>
         val tmp = new org.apache.hadoop.fs.Path(path, m.tmpName)
         val fin = new org.apache.hadoop.fs.Path(path,
@@ -324,7 +320,7 @@ private class AvroStreamingWrite(st: StructType, schemaJson: String,
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: AvroCommitMessage => m }.foreach { m =>
+    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
@@ -342,14 +338,19 @@ private class AvroStreamingWriterFactory(
       codec, partitionId, confMap)
 }
 
+/** The avro sink's batch task writer — also the avro face's task
+  * writer for the engine's table writes ([[FaceTaskWriters]]). */
 private class AvroWriterFactory(
     st: StructType, schemaJson: String, path: String, codec: String,
-    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]],
+    seq: Int = 0)
+    extends DirWriterFactory {
+  override def inDir(dir: String, seq: Int): DirWriterFactory =
+    new AvroWriterFactory(st, schemaJson, dir, codec, confMap, seq)
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     AvroSourceWriters.dataWriter(st, schemaJson, path,
-      f".part-$partitionId%05d-task-$taskId.avro.tmp",
+      DirWriterFactory.tmpName(partitionId, taskId, seq, "avro"),
       codec, partitionId, confMap)
 }
 
@@ -382,7 +383,7 @@ private object AvroSourceWriters {
       override def commit()
           : org.apache.spark.sql.connector.write.WriterCommitMessage = {
         pw.finish()
-        AvroCommitMessage(tmpName, partitionId,
+        FeatherCommitMessage(tmpName, partitionId,
           graft.io.FeatherStats.toJson(Seq(stats.snapshotAndReset())),
           fs.getFileStatus(new org.apache.hadoop.fs.Path(path, tmpName)).getLen)
       }

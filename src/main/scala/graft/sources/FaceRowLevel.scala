@@ -31,13 +31,12 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * session's engine paths (vectorized parquet scan, split avro reads)
   * stay the performance path.
   *
-  * The WRITES go through [[FaceTaskWriters]]: feather and parquet
-  * tables get their final parts from the writer tasks in one pass (the
-  * commit only renames them; on a hive layout each row goes to the leaf
-  * its partition VALUES name, so an UPDATE that changes a partition
-  * column moves the row between leaves inside the one atomic commit);
-  * avro tables land tmp feather parts that the commit converts in one
-  * distributed pass. The manifest commit then swaps groups (COW) or
+  * The WRITES go through [[FaceTaskWriters]]: every face's tables get
+  * their final parts from the writer tasks in one pass (the commit only
+  * renames them; on a hive layout each row goes to the leaf its
+  * partition VALUES name, so an UPDATE that changes a partition column
+  * moves the row between leaves inside the one atomic commit). The
+  * manifest commit then swaps groups (COW) or
   * binds deletion vectors (delta); tmp parts are deleted either way, and
   * a failed commit unwinds the final parts and fresh DV sidecars. */
 private[graft] object FaceRowLevel {
@@ -309,18 +308,14 @@ private class FaceReaderFactory(
 // ---------------------------------------------------------------------------
 
 /** The task-side part writers of the engine's DSv2 writes (inserts,
-  * row-level rewrites, staged CREATE/REPLACE). Feather and parquet
-  * tables get their FINAL parts from the writer tasks in one pass: the
-  * tasks write hidden tmp parts in the table's own face (feather: the
-  * Arrow IPC part writer; parquet: Spark's parquet OutputWriter) —
-  * routed to their hive leaves by [[RoutedWriterFactory]] on a
-  * partitioned layout — and the commit only renames them. Avro has no
-  * task-side writer: its tasks land tmp FEATHER parts that
-  * [[FaceConvert]] rewrites. */
+  * row-level rewrites, staged CREATE/REPLACE): every face's tables get
+  * their FINAL parts from the writer tasks in one pass. The tasks write
+  * hidden tmp parts in the table's own face (feather: the Arrow IPC
+  * part writer; parquet: Spark's parquet OutputWriter; avro: the avro
+  * sink's part writer) — routed to their hive leaves by
+  * [[RoutedWriterFactory]] on a partitioned layout — and the commit
+  * only renames them. */
 private[sources] object FaceTaskWriters {
-  /** Whether the tasks write final-format parts (commit = rename). */
-  def native(face: ConnectorFace): Boolean = !(face eq ConnectorFace.AvroFace)
-
   /** Every tmp part a write's tasks reported (a routed task reports one
     * per leaf it wrote). */
   def parts(messages: Seq[WriterCommitMessage]): Seq[FeatherCommitMessage] =
@@ -335,42 +330,44 @@ private[sources] object FaceTaskWriters {
     * parts of one table never differ by a literal's non-null footer. */
   def factory(spark: SparkSession, face: ConnectorFace,
               partCols: Seq[String], st: StructType,
-              dir: String): DataWriterFactory =
-    if (!native(face)) featherFactory(spark, st, dir)
-    else {
-      val dataSt = StructType(st.fields.filterNot(f =>
-        partCols.contains(f.name)))
-      val leaves =
-        if (face eq ConnectorFace.ParquetFace)
-          ParquetTaskWriterFactory(spark, dataSt, dir)
-        else featherFactory(spark, dataSt, dir)
-      if (partCols.isEmpty) leaves
-      else new RoutedWriterFactory(st, partCols, dir, leaves)
+              dir: String): DataWriterFactory = {
+    val dataSt = org.apache.spark.sql.graft.Bridge.asNullable(
+      StructType(st.fields.filterNot(f => partCols.contains(f.name))))
+    val leaves = face match {
+      case ConnectorFace.ParquetFace =>
+        ParquetTaskWriterFactory(spark, dataSt, dir)
+      case ConnectorFace.AvroFace =>
+        new AvroWriterFactory(dataSt,
+          graft.io.GraftAvro.toAvroSchema(dataSt).toString, dir,
+          face.codecFor("lz4"), GraftHadoop.confBroadcast(spark))
+      case _ => featherFactory(spark, dataSt, dir)
     }
+    if (partCols.isEmpty) leaves
+    else new RoutedWriterFactory(st, partCols, dir, leaves)
+  }
 
-  /** The tmp-feather task writer (every face's conversion input). */
+  /** The tmp-feather task writer (the feather face's, and the input a
+    * predicate overwrite's replaceWhere re-reads). */
   def featherFactory(spark: SparkSession, st: StructType,
                      dir: String): DirWriterFactory = {
     val schema = org.apache.spark.sql.graft.Bridge.asNullable(st)
-    FaceConvert.requireFeatherMappable(schema)
+    schema.fields.foreach(f =>
+      GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
     new FeatherWriterFactory(schema, dir, "lz4", 4096,
       GraftHadoop.confBroadcast(spark))
   }
 
-  /** Tmp-part messages (zero-row ones already dropped by the caller) →
-    * (final parts, the DEFERRED flat merged-stats fold input). */
-  def finalizeParts(opName: String, face: ConnectorFace,
+  /** Tmp-part messages (zero-row ones already dropped by the caller)
+    * renamed to final parts → (final parts, the DEFERRED merged-stats
+    * fold input). */
+  def finalizeParts(face: ConnectorFace,
                     fs: org.apache.hadoop.fs.FileSystem, path: String,
-                    msgs: Seq[FeatherCommitMessage], dataSchema: StructType,
-                    partCols: Seq[String], targetV: Long)
+                    msgs: Seq[FeatherCommitMessage])
       : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) =
-    if (native(face)) {
-      val renamed = FeatherDsvWrites.renameParts(fs, path, msgs, face.suffix)
-      (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
-    } else
-      FaceConvert.toFaceParts(opName, face, fs, path, msgs, dataSchema,
-        partCols, targetV)
+         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
+    val renamed = FeatherDsvWrites.renameParts(fs, path, msgs, face.suffix)
+    (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
+  }
 }
 
 /** The parquet task writer: Spark's own parquet OutputWriter (the sink
@@ -405,15 +402,17 @@ private[sources] class ParquetTaskWriterFactory(
     st: StructType, dir: String,
     out: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     extra: Map[String, String],
-    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]],
+    seq: Int = 0)
     extends DirWriterFactory {
-  override def inDir(d: String): DirWriterFactory =
-    new ParquetTaskWriterFactory(st, d, out, extra, confMap)
+  override def inDir(d: String, seq: Int): DirWriterFactory =
+    new ParquetTaskWriterFactory(st, d, out, extra, confMap, seq)
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
       import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-      private val tmpName = f".part-$partitionId%05d-task-$taskId.parquet.tmp"
+      private val tmpName =
+        DirWriterFactory.tmpName(partitionId, taskId, seq, "parquet")
       private val conf = {
         val c = new org.apache.hadoop.conf.Configuration(
           GraftHadoop.execConf(confMap))
@@ -444,9 +443,16 @@ private[sources] class ParquetTaskWriterFactory(
 }
 
 /** A task writer factory that can write the same parts into another
-  * directory (a hive leaf). */
+  * directory (a hive leaf); `seq` > 0 names a further part of the same
+  * task in that directory. */
 private[sources] trait DirWriterFactory extends DataWriterFactory {
-  def inDir(dir: String): DirWriterFactory
+  def inDir(dir: String, seq: Int): DirWriterFactory
+}
+
+private[sources] object DirWriterFactory {
+  def tmpName(partitionId: Int, taskId: Long, seq: Int, ext: String): String =
+    f".part-$partitionId%05d-task-$taskId" +
+      (if (seq > 0) s"-$seq" else "") + s".$ext.tmp"
 }
 
 /** One routed task's parts, one per hive leaf it wrote; each part's
@@ -454,11 +460,39 @@ private[sources] trait DirWriterFactory extends DataWriterFactory {
 private[sources] case class RoutedCommitMessage(parts: Seq[FeatherCommitMessage])
     extends WriterCommitMessage
 
+/** The hive-layout writes ask Spark for their rows grouped by leaf —
+  * a local sort on the partition columns, as Spark's own partitioned
+  * file sink does — so a [[RoutedWriterFactory]] task holds ONE open
+  * part writer at a time. `clusterByLeaf` also asks for a (non-strict)
+  * clustering shuffle on them: a leaf's rows meet in one task, so a
+  * leaf gets one part unless adaptive execution splits a large one. */
+private[sources] trait LeafOrderedWrite
+    extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder}
+  import org.apache.spark.sql.connector.expressions.Expressions.sort
+  import org.apache.spark.sql.graft.Bridge.columnRef
+
+  /** The partition columns the tasks route by (empty: no routing). */
+  protected def leafCols: Seq[String]
+  protected def clusterByLeaf: Boolean = true
+
+  override def requiredDistribution(): Distribution =
+    if (leafCols.isEmpty || !clusterByLeaf) Distributions.unspecified()
+    else Distributions.clustered(leafCols.map(columnRef).toArray)
+  override def distributionStrictlyRequired(): Boolean = false
+  override def requiredOrdering(): Array[SortOrder] =
+    leafCols.map(c => sort(columnRef(c),
+      SortDirection.ASCENDING)).toArray
+}
+
 /** Hive-layout task writer: each row goes to the leaf its partition
-  * VALUES name (Spark's hive escaping, the null marker for a null — the
-  * same leaf naming as [[FeatherMutations.routePartitionedInserts]]),
-  * through one lazily opened part writer per leaf, holding the DATA
-  * columns only (partition values live in the directory chain). */
+  * VALUES name ([[FeatherPartitions.leafName]]), holding the DATA
+  * columns only (partition values live in the directory chain). Rows
+  * arrive grouped by leaf ([[LeafOrderedWrite]]): the open part is
+  * finished when the leaf changes, so a task holds one writer at a
+  * time. A leaf that comes back (an input Spark did not sort) gets a
+  * further part, never a reopened one. */
 private[sources] class RoutedWriterFactory(st: StructType,
                                            partCols: Seq[String],
                                            root: String,
@@ -468,103 +502,50 @@ private[sources] class RoutedWriterFactory(st: StructType,
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
       import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+      import org.apache.spark.sql.connector.write.DataWriter
       private val partIdx = partCols.map(st.fieldIndex)
       private val toScala = partIdx.map(i =>
         CatalystTypeConverters.createToScalaConverter(st(i).dataType))
       private val data = UnsafeProjection.create(st.fields.indices
         .filterNot(partIdx.contains)
         .map(i => BoundReference(i, st(i).dataType, st(i).nullable)))
-      private val open = scala.collection.mutable.LinkedHashMap
-        .empty[String, org.apache.spark.sql.connector.write.DataWriter[InternalRow]]
+      private var leaf: String = null
+      private var open: DataWriter[InternalRow] = null
+      private val opened = scala.collection.mutable.HashMap.empty[String, Int]
+      private val finished =
+        scala.collection.mutable.ArrayBuffer.empty[(DataWriter[InternalRow], FeatherCommitMessage)]
       private def leafOf(row: InternalRow): String =
-        partCols.indices.map { j =>
-          val raw = row.get(partIdx(j), st(partIdx(j)).dataType)
-          val v = if (raw == null) null else toScala(j)(raw).toString
-          if (v == FeatherPartitions.HiveNull)
-            throw new IllegalArgumentException(
-              s"partition value for '${partCols(j)}' is the literal hive " +
-                s"null marker '$v' — it would be unreadable as anything " +
-                "but NULL; use an actual null")
-          s"${FeatherPartitions.escapePath(partCols(j))}=" +
-            (if (v == null) FeatherPartitions.HiveNull
-             else FeatherPartitions.escapePath(v))
-        }.mkString("/")
-      override def write(row: InternalRow): Unit = {
-        val leaf = leafOf(row)
-        open.getOrElseUpdate(leaf,
-          leaves.inDir(new org.apache.hadoop.fs.Path(root, leaf).toString)
-            .createWriter(partitionId, taskId)).write(data(row))
+        FeatherPartitions.leafName(s"write to $root", partCols,
+          partCols.indices.map { j =>
+            val raw = row.get(partIdx(j), st(partIdx(j)).dataType)
+            if (raw == null) null else toScala(j)(raw)
+          })
+      private def finishOpen(): Unit = if (open != null) {
+        val m = open.commit().asInstanceOf[FeatherCommitMessage]
+        finished += (open -> m.copy(tmpName = s"$leaf/${m.tmpName}"))
+        open = null
       }
-      override def commit(): WriterCommitMessage =
-        RoutedCommitMessage(open.toSeq.map { case (leaf, w) =>
-          val m = w.commit().asInstanceOf[FeatherCommitMessage]
-          m.copy(tmpName = s"$leaf/${m.tmpName}")
-        })
-      override def abort(): Unit = open.values.foreach(w =>
-        try w.abort() catch { case _: Exception => () })
+      override def write(row: InternalRow): Unit = {
+        val l = leafOf(row)
+        if (l != leaf) {
+          finishOpen()
+          val seq = opened.getOrElse(l, 0)
+          opened(l) = seq + 1
+          open = leaves.inDir(new org.apache.hadoop.fs.Path(root, l).toString,
+            seq).createWriter(partitionId, taskId)
+          leaf = l
+        }
+        open.write(data(row))
+      }
+      override def commit(): WriterCommitMessage = {
+        finishOpen()
+        RoutedCommitMessage(finished.map(_._2).toSeq)
+      }
+      override def abort(): Unit =
+        (Option(open).toSeq ++ finished.map(_._1)).foreach(w =>
+          try w.abort() catch { case _: Exception => () })
       override def close(): Unit = ()
     }
-}
-
-/** Shared driver-side conversion for the tasks that land tmp FEATHER
-  * parts (see [[FaceTaskWriters]]): read them and land FINAL face parts
-  * (flat: one writeParts pass; hive: rows route to the leaf their
-  * partition values name). Returns the (rel name, len) parts plus the
-  * flat parts' merged-stats fold input — the CALLER upserts after its
-  * manifest commit. Tmp parts are deleted here, success or not (they
-  * were never visible). */
-private object FaceConvert {
-  def toFaceParts(op: String, face: ConnectorFace,
-                  fs: org.apache.hadoop.fs.FileSystem, path: String,
-                  tmpMsgs: Seq[FeatherCommitMessage],
-                  dataSchema: StructType, partCols: Seq[String],
-                  targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
-    if (tmpMsgs.isEmpty) return (Seq.empty, Map.empty)
-    val spark = SparkSession.active
-    val root = new org.apache.hadoop.fs.Path(path)
-    val tmpFiles = tmpMsgs.map(m =>
-      (new org.apache.hadoop.fs.Path(path, m.tmpName).toString, m.bytes))
-    try {
-      val df = GraftFeather.readFiles(spark, tmpFiles)
-      val prefix = FeatherSnapshots.runPrefix(targetV)
-      if (partCols.isEmpty) {
-        // cap the write fan-out like the mutation tier: a 32-task insert
-        // must not fill the table with 32 near-empty parts per statement
-        val parts = face.writeParts(
-          df.select(dataSchema.fieldNames.toSeq.map(
-            org.apache.spark.sql.functions.col): _*)
-            .coalesce(ConnectorFace.capWriteParts(df)),
-          path, prefix, face.codecFor("lz4"))
-        (parts.map { case (n, len, _) => (n, len) },
-          parts.map { case (n, len, js) =>
-            n -> (len, FeatherStats.fromJson(js)) }.toMap)
-      } else {
-        // routed inserts fold their own per-leaf stats (the mutation
-        // tier's shared path)
-        (FeatherMutations.routePartitionedInserts(op, face, fs, root, df,
-          partCols, dataSchema, prefix, face.codecFor("lz4")), Map.empty)
-      }
-    } finally tmpMsgs.foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
-  }
-
-  /** Unwind twin of the routed inserts' per-leaf merged-stats fold —
-    * ONE definition in [[FeatherMutations.unpublishLeafStats]], shared
-    * with the partitioned REPLACE/CTAS commits. No-op for the flat path
-    * (its fold is already deferred past the commit). */
-  def unpublishLeafStats(fs: org.apache.hadoop.fs.FileSystem,
-                         path: String, rels: Seq[String]): Unit =
-    FeatherMutations.unpublishLeafStats(fs,
-      new org.apache.hadoop.fs.Path(path), rels)
-
-  /** The write schema must round-trip through the tmp feather parts. */
-  def requireFeatherMappable(st: StructType): Unit =
-    st.fields.foreach(f =>
-      GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
 }
 
 /** Group-based COW write — ONE commit protocol for every face and
@@ -577,11 +558,12 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
                                     path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String])
-    extends WriteBuilder with Write with BatchWrite {
+    extends WriteBuilder with Write with BatchWrite with LeafOrderedWrite {
   override def build(): Write = this
   override def toBatch: BatchWrite = this
   override def description(): String =
     s"graft COW ${op.command()} $path (${face.label})"
+  override protected def leafCols: Seq[String] = partCols
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
@@ -604,8 +586,8 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
     if (state.keptRel.isEmpty && data.isEmpty) return
     val opName = s"rowlevel_${op.command().toString.toLowerCase}"
     val targetV = state.snap.version + 1
-    val (parts, flatStats) = FaceTaskWriters.finalizeParts(opName, face, fs,
-      path, data.toSeq, dataSchema, partCols, targetV)
+    val (parts, flatStats) = FaceTaskWriters.finalizeParts(face, fs, path,
+      data.toSeq)
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     added ++= parts
     if (added.isEmpty &&
@@ -619,7 +601,8 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
         readRel = Some(state.keptRel)): Unit
     catch { case e: Throwable =>
       FeatherDsvWrites.deleteFinalized(fs, path, added.toSeq.map(_._1))
-      FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+      FeatherMutations.unpublishLeafStats(fs,
+        new org.apache.hadoop.fs.Path(path), added.toSeq.map(_._1))
       throw e
     }
     // after the manifest commit: a lost conflict check never strands
@@ -650,12 +633,18 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
                                       path: String, face: ConnectorFace,
                                       dataSchema: StructType,
                                       partCols: Seq[String])
-    extends DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite {
+    extends DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite
+    with LeafOrderedWrite {
 
   private val rowSchema: StructType = info.schema()
   private val rowIdSchema: StructType = info.rowIdSchema().orElseThrow(() =>
     new IllegalStateException(
       s"delta ${op.command()} on $path: Spark supplied no rowId schema"))
+  // sort only: a clustering shuffle would also move every deleted
+  // row's id, which the sidecars take by file wherever it arrives
+  override protected def clusterByLeaf: Boolean = false
+  override protected def leafCols: Seq[String] =
+    if (partCols.forall(rowSchema.fieldNames.contains)) partCols else Nil
 
   override def build(): DeltaWrite = this
   override def toBatch(): DeltaBatchWrite = this
@@ -703,8 +692,8 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
     val targetV = state.snap.version + 1
     val opName =
       s"rowlevel_delta_${op.command().toString.toLowerCase}"
-    val (parts, flatStats) = FaceTaskWriters.finalizeParts(opName, face,
-      fs, path, insertMsgs, dataSchema, partCols, targetV)
+    val (parts, flatStats) = FaceTaskWriters.finalizeParts(face, fs, path,
+      insertMsgs)
     // exact row counts (stats sidecars) let fully-masked files DROP from
     // the manifest instead of carrying a 100%-coverage vector — loads
     // are bounded by the TOUCHED file set, not the table
@@ -738,7 +727,8 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
       // entries, AND the freshly written DV sidecars were never
       // visible — delete them all
       FeatherDsvWrites.deleteFinalized(fs, path, added.toSeq.map(_._1))
-      FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+      FeatherMutations.unpublishLeafStats(fs,
+        new org.apache.hadoop.fs.Path(path), added.toSeq.map(_._1))
       bindings.values.foreach { case (dvRel, _) =>
         try fs.delete(new org.apache.hadoop.fs.Path(root, dvRel), false)
         catch { case _: Exception => () }

@@ -13,13 +13,11 @@ import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftHadoop}
   * face (no DSv2 connector) and HIVE-PARTITIONED tables on any face
   * (the flat connector sinks refuse root appends into key=value
   * layouts; this write routes each row to the leaf its partition values
-  * name, through the engine's shared
-  * [[FeatherMutations.routePartitionedInserts]]).
+  * name, [[FeatherPartitions.leafName]]).
   *
-  * Task rows land through [[FaceTaskWriters]] (feather/parquet: final
-  * parts in one pass, routed to their leaves on a hive layout; avro:
-  * tmp feather parts and ONE driver-side conversion pass); the manifest
-  * commit then publishes:
+  * Task rows land as final parts in one pass through
+  * [[FaceTaskWriters]] (clustered by leaf and routed to their leaves on
+  * a hive layout); the manifest commit then publishes:
   *
   *  - append (`INSERT INTO`): add-only — commutes with every concurrent
   *    commit (empty read set); a zero-row insert publishes NO version.
@@ -43,7 +41,8 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
                                     writeSchema: StructType)
     extends WriteBuilder with Write with BatchWrite
     with org.apache.spark.sql.connector.write.SupportsOverwrite
-    with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
+    with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite
+    with LeafOrderedWrite {
 
   /** append | truncate | static (leaf-equality filters) | where | dynamic */
   private var mode: String = "append"
@@ -115,6 +114,8 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
   override def toBatch: BatchWrite = this
   override def description(): String =
     s"graft $mode insert $path (${face.label})"
+  override protected def leafCols: Seq[String] =
+    if (mode == "where") Nil else partCols
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
@@ -164,8 +165,8 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       case _ => "insert_overwrite"
     }
     val targetV = snap.version + 1
-    val (parts, flatStats) = FaceTaskWriters.finalizeParts(opName, face, fs,
-      path, data.toSeq, dataSchema, partCols, targetV)
+    val (parts, flatStats) = FaceTaskWriters.finalizeParts(face, fs, path,
+      data.toSeq)
     lazy val relOfAbs = snap.files.map { case (rel, _) =>
       new org.apache.hadoop.fs.Path(root, rel).toString -> rel }.toMap
     // which existing files does this statement replace?
@@ -224,7 +225,7 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
         readRel = Some(removeRel)): Unit
     catch { case e: Throwable =>
       FeatherDsvWrites.deleteFinalized(fs, path, added.toSeq.map(_._1))
-      FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+      FeatherMutations.unpublishLeafStats(fs, root, added.toSeq.map(_._1))
       throw e
     }
     FeatherMutations.upsertLeafStats(fs, root, flatStats)

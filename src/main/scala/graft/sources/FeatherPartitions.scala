@@ -46,6 +46,20 @@ private[graft] object FeatherPartitions {
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(s)
 
+  /** THE leaf a row's partition values name (`k1=v1/k2=v2`, escaped,
+    * the null marker for a null) — one definition for every writer that
+    * routes rows to leaves. A value spelled as the null marker itself
+    * refuses: it would read back as NULL. */
+  def leafName(op: String, partCols: Seq[String], values: Seq[Any]): String =
+    partCols.zip(values).map { case (c, v) =>
+      if (v != null && v.toString == HiveNull)
+        throw new IllegalArgumentException(
+          s"$op: partition value for '$c' is the literal hive null " +
+            s"marker '$v' — it would be unreadable as anything but " +
+            "NULL; use an actual null")
+      s"${escapePath(c)}=${if (v == null) HiveNull else escapePath(v.toString)}"
+    }.mkString("/")
+
   /** Hive-layout detection over a table's relative directory chains
     * (ONE definition — the mutation tier and the conditional merge both
     * route by it; a drifted copy re-opens the split-leaf bug class):

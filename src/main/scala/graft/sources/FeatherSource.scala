@@ -722,6 +722,7 @@ private class FeatherWriteBuilder(
       Option(info.options.get("mergeschema")).exists(_.toBoolean))
 }
 
+/** One task's tmp part (any face) and its stats sidecar content. */
 private case class FeatherCommitMessage(tmpName: String, partitionId: Int,
                                         statsJson: String, bytes: Long)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
@@ -958,14 +959,15 @@ private class FeatherStreamingWriterFactory(
 
 private class FeatherWriterFactory(
     st: StructType, path: String, codec: String, batchSize: Int,
-    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]],
+    seq: Int = 0)
     extends DirWriterFactory {
-  override def inDir(dir: String): DirWriterFactory =
-    new FeatherWriterFactory(st, dir, codec, batchSize, confMap)
+  override def inDir(dir: String, seq: Int): DirWriterFactory =
+    new FeatherWriterFactory(st, dir, codec, batchSize, confMap, seq)
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     FeatherSourceWriters.dataWriter(st, path,
-      f".part-$partitionId%05d-task-$taskId.feather.tmp",
+      DirWriterFactory.tmpName(partitionId, taskId, seq, "feather"),
       codec, batchSize, partitionId, confMap)
 }
 

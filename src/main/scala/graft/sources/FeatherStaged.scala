@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.catalog.{StagedTable, SupportsWrite, Table
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{GraftFeather, TableDdl}
+import graft.io.TableDdl
 
 /** The STAGED table behind `StagingTableCatalog` — atomic `CREATE OR
   * REPLACE TABLE [AS SELECT]`, `REPLACE TABLE`, and atomic CTAS by name
@@ -14,17 +14,15 @@ import graft.io.{GraftFeather, TableDdl}
   * the new leaves in the one commit).
   *
   * Protocol: Spark stages the table, writes the query through
-  * [[newWriteBuilder]] — the tasks land hidden parts in a sibling
-  * staging directory, visible to nobody, through [[FaceTaskWriters]]:
-  * a feather or parquet table gets its FINAL parts there in one pass
-  * (routed to their hive leaves on a partitioned layout), avro gets tmp
-  * feather parts — then calls [[commitStagedChanges]], which hands the
-  * publish to the engine's DDL
+  * [[newWriteBuilder]] — the tasks land the table's FINAL parts, in its
+  * own face, in a hidden sibling staging directory visible to nobody,
+  * in one pass through [[FaceTaskWriters]] (routed to their hive leaves
+  * on a partitioned layout) — then calls [[commitStagedChanges]], which
+  * hands the publish to the engine's DDL
   * — [[TableDdl.createTableAs]] / [[TableDdl.createTable]] /
-  * [[TableDdl.replaceTable]]: task-written final parts are MOVED into
-  * the table under the commit's prefix, tmp feather parts are read back
-  * as the statement's query. Either way the statement gets the DDL's
-  * semantics: schema stamps for empty results, prior versions
+  * [[TableDdl.replaceTable]]: the task-written parts are MOVED into
+  * the table under the commit's prefix, and the statement gets the
+  * DDL's semantics: schema stamps for empty results, prior versions
   * time-travelable with RESTORE undoing a replace, and the strictest
   * conflict contract in the tier (replace commits with the FULL read set
   * + requireNoNewFiles — ANY concurrent commit aborts; a racing CREATE
@@ -81,18 +79,14 @@ private[graft] class FeatherStagedTable(path: String, identName: String,
         graft.io.FeatherStats.fromJson(m.statsJson).nonEmpty)
       val query: Option[TableDdl.Rows] =
         if (dataTmps.isEmpty) None
-        else if (FaceTaskWriters.native(face))
-          Some(TableDdl.LandedRows(tableSchema, (fs, root, prefix) =>
-            FeatherDsvWrites.landParts(fs, stagingDir, root, dataTmps,
-              (m, i) => {
-                // a routed part keeps its hive leaf
-                val leaf = graft.io.FeatherMutations.relDirOf(m.tmpName)
-                (if (leaf.isEmpty) "" else s"$leaf/") +
-                  f"$prefix-$i%05d${face.suffix}"
-              })))
-        else Some(TableDdl.QueryRows(GraftFeather.readFiles(spark,
-          dataTmps.map(m => (new org.apache.hadoop.fs.Path(stagingDir,
-            m.tmpName).toString, m.bytes)))))
+        else Some(TableDdl.LandedRows(tableSchema, (fs, root, prefix) =>
+          FeatherDsvWrites.landParts(fs, stagingDir, root, dataTmps,
+            (m, i) => {
+              // a routed part keeps its hive leaf
+              val leaf = graft.io.FeatherMutations.relDirOf(m.tmpName)
+              (if (leaf.isEmpty) "" else s"$leaf/") +
+                f"$prefix-$i%05d${face.suffix}"
+            })))
       if (replaceExisting)
         // replaceTable handles the table-vanished-since-staging race
         // itself: orCreate falls back to CREATE, plain REPLACE refuses
@@ -130,8 +124,10 @@ private class FeatherStagedWrite(
     staged: scala.collection.mutable.ArrayBuffer[FeatherCommitMessage],
     face: graft.io.ConnectorFace, partCols: Seq[String])
     extends WriteBuilder with Write with BatchWrite
-    with org.apache.spark.sql.connector.write.SupportsTruncate {
+    with org.apache.spark.sql.connector.write.SupportsTruncate
+    with LeafOrderedWrite {
 
+  override protected def leafCols: Seq[String] = partCols
   // a staged replace IS a truncate-and-write; the staged commit already
   // publishes replace semantics, so the mode flag changes nothing
   override def truncate(): WriteBuilder = this

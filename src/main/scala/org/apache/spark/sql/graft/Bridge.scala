@@ -223,4 +223,20 @@ object Bridge {
       : org.apache.spark.sql.types.StructType = st.asNullable
   def asNullable(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = dt.asNullable
+
+  /** A one-part column reference (no name parsing: a partition column
+    * may contain dots). */
+  def columnRef(name: String)
+      : org.apache.spark.sql.connector.expressions.NamedReference =
+    org.apache.spark.sql.connector.expressions.FieldReference.column(name)
+
+  /** The table a row-level rewrite writes (Spark wraps it with the
+    * operation), and the operation's command name. */
+  def rowLevelTarget(t: org.apache.spark.sql.connector.catalog.Table)
+      : Option[(org.apache.spark.sql.connector.catalog.Table, String)] =
+    t match {
+      case org.apache.spark.sql.connector.write.RowLevelOperationTable(
+          table, op) => Some((table, op.command().toString))
+      case _ => None
+    }
 }

@@ -59,7 +59,7 @@ class ReplaceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql(s"REPLACE TABLE graft.`${tmp("nope")}` (id BIGINT) " +
         "USING feather").collect()
     }
-    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"),
+    assert(e.getMessage.contains("CREATE OR REPLACE TABLE creates"),
       e.getMessage)
   }
 

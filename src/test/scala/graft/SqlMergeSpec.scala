@@ -230,6 +230,42 @@ class SqlMergeSpec extends AnyFunSuite {
       eDup.getMessage)
   }
 
+  test("UPDATE and MERGE refuse a lossy assignment on graft and " +
+       "graft_dv; lossless up-casts and explicit CASTs run") {
+    Seq("graft", "graft_dv").foreach { face =>
+      val path = tmp(s"lossy_$face")
+      writeTable(path)
+      srcView("updates")
+      val before = collect(path)
+      def refuse(sql: String): Unit = {
+        val e = intercept[Exception] { spark.sql(sql).collect() }
+        assert(e.getMessage.contains("lossless"), s"$sql → ${e.getMessage}")
+      }
+      // double and decimal into the BIGINT key: ANSI store assignment
+      // would write 15
+      refuse(s"UPDATE $face.`$path` SET id = 15.5D WHERE id = 1")
+      refuse(s"UPDATE $face.`$path` SET id = 15.5 WHERE id = 1")
+      refuse(s"""MERGE INTO $face.`$path` t USING updates s ON t.id = s.id
+                |WHEN MATCHED THEN UPDATE SET id = s.amt""".stripMargin)
+      refuse(s"""MERGE INTO $face.`$path` t USING updates s ON t.id = s.id
+                |WHEN NOT MATCHED THEN INSERT (id, grade, amt)
+                |VALUES (s.amt, s.grade, s.amt)""".stripMargin)
+      assert(collect(path) === before, "refusals change nothing")
+      assert(FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
+        .get.version === 1L, "refusals publish no version")
+      // int into DOUBLE is lossless; an explicit CAST is the intended
+      // narrowing
+      spark.sql(s"UPDATE $face.`$path` SET amt = 7 WHERE id = 1").collect()
+      spark.sql(
+        s"""MERGE INTO $face.`$path` t USING updates s ON t.id = s.id
+           |WHEN MATCHED AND s.id = 60 THEN UPDATE SET id = CAST(s.amt AS BIGINT)"""
+          .stripMargin).collect()
+      val after = collect(path)
+      assert(after.find(_._1 == 1L).get._3 == 7.0)
+      assert(after.exists(_._1 == 6000L) && !after.exists(_._1 == 60L))
+    }
+  }
+
   test("MERGE INTO works on a hive-partitioned parquet-face table " +
        "(SQL → partitioned clause routing)") {
     import spark.implicits._

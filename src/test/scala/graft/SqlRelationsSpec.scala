@@ -215,6 +215,27 @@ class SqlRelationsSpec extends AnyFunSuite {
     assert(graft.io.ParquetTable.read(spark, path).count() === 1)
   }
 
+  test("a partitioned INSERT clusters its rows by leaf: a query spread " +
+       "over several tasks lands one part per leaf") {
+    val path = tmp("ins_cluster")
+    import spark.implicits._
+    graft.io.ParquetTable.write(
+      (1 to 6).map(i => (i.toLong, s"d${i % 3}")).toDF("id", "day"),
+      path, partitionBy = Seq("day"))
+    val before = FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
+      .get.files.map(_._1).toSet
+    // four input partitions, every one holding rows of all three leaves
+    spark.sql(s"INSERT INTO graft.`$path` SELECT id, " +
+      "concat('n', CAST(id % 3 AS STRING)) AS day " +
+      "FROM range(0, 400, 1, 4)").collect()
+    val added = FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
+      .get.files.map(_._1).filterNot(before)
+    assert(added.map(_.takeWhile(_ != '/')).sorted ===
+      Seq("day=n0", "day=n1", "day=n2"), added.mkString(", "))
+    assert(graft.io.ParquetTable.read(spark, path)
+      .where(col("day").startsWith("n")).count() === 400)
+  }
+
   test("a NONDETERMINISTIC partitioned insert materializes once and " +
        "routes consistently (Spark/Delta sink parity — no refusal)") {
     val path = tmp("ins_nondet")
@@ -249,13 +270,12 @@ class SqlRelationsSpec extends AnyFunSuite {
       spark.sql(s"INSERT INTO graft.`$path` BY NAME " +
         "SELECT 1L AS id, 'd0' AS day, 'x' AS extra")
     }
-    assert(e1.getMessage.contains("TOO_MANY_DATA_COLUMNS"),
-      s"an extra column refuses: ${e1.getMessage}")
+    assert(e1.getMessage.contains("mergeSchema"),
+      s"evolution refusal must name the opt-in: ${e1.getMessage}")
     val e2 = intercept[Exception] {
       spark.sql(s"INSERT INTO graft.`$path` SELECT 1L")
     }
-    assert(e2.getMessage.contains("NOT_ENOUGH_DATA_COLUMNS"),
-      e2.getMessage)
+    assert(e2.getMessage.contains("positional"))
     val e3 = intercept[Exception] {
       spark.sql(s"INSERT INTO graft.`$path` PARTITION (nope='d0') " +
         "SELECT 1L")
@@ -268,8 +288,7 @@ class SqlRelationsSpec extends AnyFunSuite {
     val e4 = intercept[Exception] {
       spark.sql(s"INSERT INTO graft.`$path` (id) SELECT 1L")
     }
-    assert(e4.getMessage.contains(
-      "Cannot find data for the output column `day`"), e4.getMessage)
+    assert(e4.getMessage.contains("partition column 'day'"))
   }
 
   test("INSERT is an eager-once command: it mutates at statement issue " +
